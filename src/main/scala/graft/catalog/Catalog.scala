@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, StructField, StringType, BooleanType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalog introspection: the reference's metadata surface
   * (SQL_DATA_INTEGRATION_TOOL.py:155-239 — `get_databases`, `get_tables`,
@@ -57,8 +58,20 @@ object Catalog {
       StructField("data_type", StringType, nullable = false),
       StructField("is_nullable", BooleanType, nullable = false),
       StructField("column_default", StringType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .orderBy("column_name")
+    byColumnName(spark, rows, schema)
+  }
+
+  /** Schema-sized rows as a local relation ordered by `column_name` (the
+    * first field), sorted on the driver with the comparison Spark's
+    * `orderBy("column_name")` uses — UTF8String's binary order, which
+    * differs from `String.compareTo` once supplementary-plane characters
+    * meet U+E000..U+FFFF. A local relation collects with no Spark job,
+    * where a parallelized-and-sorted one costs three. */
+  private def byColumnName(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val sorted = rows.sortBy(r => UTF8String.fromString(r.getString(0)))(
+      Ordering.fromLessThan(_.binaryCompare(_) < 0))
+    spark.createDataFrame(sorted.asJava, schema)
   }
 
   /** ANALYZE TABLE: per-column profile — null count, HLL++ approximate
@@ -103,9 +116,7 @@ object Catalog {
       StructField("approx_distinct", org.apache.spark.sql.types.LongType, nullable = true),
       StructField("min_value", StringType, nullable = true),
       StructField("max_value", StringType, nullable = true)))
-    val spark = df.sparkSession
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .orderBy("column_name")
+    byColumnName(df.sparkSession, rows, schema)
   }
 
   /** Primary-key candidates (ref 222-239): columns whose distinct count

@@ -661,7 +661,12 @@ object Dedup {
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .distinct())
-    val nEdges = edges.count() // one cheap job over the eager checkpoint
+    // Only the driver path's gate needs the measured count. Reliable-
+    // checkpoint callers always run distributed, so for them emptiness
+    // (a one-row probe) is all that matters, not a scan of every edge.
+    val nEdges =
+      if (checkpointDir.isEmpty) edges.count() // one cheap job over the eager checkpoint
+      else if (edges.isEmpty) 0L else Long.MaxValue
     if (nEdges == 0) return empty
 
     // ANSWER-SIZED PATH (guide §2.4/§3.1): at or below the cap the edge

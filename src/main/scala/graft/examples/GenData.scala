@@ -55,12 +55,32 @@ object GenData {
     element_at(array(choices.map(lit): _*),
       (pmod(hash(col("id"), lit(salt)), lit(choices.size)) + 1).cast("int"))
 
-  def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
-    val sf = if (args.length > 1) args(1).toDouble else 1.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = graft.GraftSession(s"local[$cpus]", cpus)
-    try generate(spark, outDir, sf) finally spark.stop()
+  val Usage: String =
+    "usage: GenData [outDir [scaleFactor]]  (defaults /tmp/graft_sf1 1.0; " +
+      "every table under outDir is overwritten)"
+
+  /** (outDir, scale factor) from the command line, or why it is refused.
+    * `outDir` is written with SaveMode.Overwrite, so a flag-like argument
+    * is never taken for it, and extra or malformed arguments are errors
+    * rather than silently ignored. */
+  def parseArgs(args: Seq[String]): Either[String, (String, Double)] =
+    args.find(_.startsWith("-")) match {
+      case Some(flag) => Left(s"unknown option '$flag'")
+      case None if args.length > 2 => Left(s"unexpected argument '${args(2)}'")
+      case None =>
+        val sf = args.lift(1).fold(Option(1.0))(_.toDoubleOption).filter(x => x > 0 && !x.isInfinite)
+        sf.map(args.headOption.getOrElse("/tmp/graft_sf1") -> _)
+          .toRight(s"scale factor '${args(1)}' is not a positive number")
+    }
+
+  def main(args: Array[String]): Unit = parseArgs(args.toSeq) match {
+    case Left(err) =>
+      System.err.println(s"GenData: $err\n$Usage")
+      sys.exit(2)
+    case Right((outDir, sf)) =>
+      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+      val spark = graft.GraftSession(s"local[$cpus]", cpus)
+      try generate(spark, outDir, sf) finally spark.stop()
   }
 
   def generate(spark: SparkSession, outDir: String, sf: Double): Unit = {

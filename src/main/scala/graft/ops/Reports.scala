@@ -41,14 +41,23 @@ object Reports {
     * matplotlib figure embedded in its PDF/PNG export) + a manifest tying
     * the pieces together. Only the already-aggregated chart rows (capped
     * at `maxChartRows` — past that no chart is readable anyway) ever
-    * reach the driver. */
+    * reach the driver. The chart aggregation runs once: an unclipped
+    * chart's CSV is written from the rows already collected for the
+    * rendering, and only a clipped chart re-runs it to write every group. */
   def exportReport(chartData: DataFrame, fullResult: DataFrame, outDir: String,
       chartType: String = "bar", title: String = "report",
       maxChartRows: Int = 500): Unit = {
-    chartData.coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$outDir/chart_data")
-    fullResult.write.mode("overwrite").json(s"$outDir/result")
+    val spark = chartData.sparkSession
     val rows = chartData.limit(maxChartRows + 1).collect()
     val clipped = rows.size > maxChartRows
+    val csvSource =
+      if (clipped) chartData
+      else {
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.toList.asJava, chartData.schema)
+      }
+    csvSource.coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$outDir/chart_data")
+    fullResult.write.mode("overwrite").json(s"$outDir/result")
     val data = rows.take(maxChartRows).toSeq.map { r =>
       val label = Option(r.get(0)).map(_.toString).getOrElse("null")
       val v = r.get(1) match {
@@ -58,7 +67,6 @@ object Reports {
       }
       (label, v)
     }
-    val spark = chartData.sparkSession
     writeText(spark, s"$outDir/chart.svg", ChartSvg.render(chartType, data, title))
     writeBytes(spark, s"$outDir/chart.png", ChartRaster.render(chartType, data, title))
     writeBytes(spark, s"$outDir/chart.pdf", ChartPdf.render(chartType, data, title))

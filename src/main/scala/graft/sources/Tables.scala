@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.graft.ParquetFooterSchema
 
 /** Table access layer over a directory of parquet files (one per table).
   *
@@ -9,7 +10,8 @@ import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
   * (SQL_DATA_INTEGRATION_TOOL.py:146-181 — `set_database`/`get_tables`)
   * re-expressed as a lakehouse-style directory catalog: a "database" is a
   * directory, a "table" is a parquet dataset inside it. Reads are plain
-  * `spark.read.parquet`, so Catalyst gets full pushdown/pruning and, at
+  * `spark.read.parquet` (with the schema read from the footer on the
+  * driver — see [[load]]), so Catalyst gets full pushdown/pruning and, at
   * 100 TB, partition pruning on partitioned layouts for free.
   */
 object Tables {
@@ -20,7 +22,24 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
+  /** One table of `dir` as a DataFrame with normalised timestamps.
+    *
+    * The schema is read on the driver from the one footer Spark's own
+    * inference would touch (`_common_metadata`, else `_metadata`, else the
+    * first visible data file — single-file, flat and partitioned tables
+    * alike) and handed to the reader, so a load launches no Spark job.
+    * Spark's inference, with its one-task footer job, is kept when the
+    * session sets `spark.sql.parquet.mergeSchema` and for the cases listed
+    * on [[org.apache.spark.sql.graft.ParquetFooterSchema]]; a missing table
+    * still fails with Spark's own PATH_NOT_FOUND. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = path(dir, name)
+    val df = ParquetFooterSchema(spark, p)
+      .fold(spark.read.parquet(p))(s => spark.read.schema(s).parquet(p))
+    normalize(df, name)
+  }
+
+  private[graft] def normalize(df: DataFrame, name: String): DataFrame = {
     // Timestamp normalization: the generated tables have carried parquet
     // timestamps in two physical flavors across regenerations —
     //   * TIMESTAMP(NANOS), which Spark's vectorized reader rejects; with
@@ -35,7 +54,6 @@ object Tables {
     //     value-preserving cast under a UTC session.
     // Both rewrites keep every downstream operator and oracle comparison
     // physical-layout-independent.
-    val df = spark.read.parquet(path(dir, name))
     df.schema.fields.foldLeft(df) { (acc, f) =>
       f.dataType.typeName match {
         case "long" if name == "events" && f.name == "ts" =>

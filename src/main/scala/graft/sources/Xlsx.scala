@@ -2,6 +2,9 @@ package graft.sources
 
 import java.io.InputStream
 import java.util.zip.ZipFile
+import javax.xml.stream.{XMLInputFactory, XMLStreamException, XMLStreamReader}
+import javax.xml.stream.XMLStreamConstants.{CDATA, CHARACTERS, DTD, END_ELEMENT, SPACE, START_ELEMENT}
+import javax.xml.stream.util.StreamReaderDelegate
 
 import scala.collection.mutable
 
@@ -10,7 +13,11 @@ import org.w3c.dom.Element
 
 /** Native xlsx (Office Open XML) workbook reader — no external
   * dependencies: an .xlsx file is a zip of XML parts, and the JDK ships
-  * both the zip codec and a DOM parser. Mirrors the reference's openpyxl
+  * the zip codec and both XML parsers used here. The two large parts,
+  * `sharedStrings.xml` and the sheet, are read in one streaming StAX pass
+  * each (no document tree; cells are built as their end tags arrive); the
+  * tiny `workbook.xml` and its rels part are read as DOM. Both parsers
+  * refuse DTDs and never resolve an external entity. Mirrors the reference's openpyxl
   * usage (SQL_DATA_INTEGRATION_TOOL.py:555-577: open workbook, list sheet
   * names, read a chosen sheet into rows, first row = headers).
   *
@@ -68,24 +75,70 @@ object Xlsx {
     val sheetPath = if (part.startsWith("/")) part.drop(1) else "xl/" + part
     val shared: IndexedSeq[String] =
       if (zip.getEntry("xl/sharedStrings.xml") == null) IndexedSeq.empty
-      else elements(parse(zip, "xl/sharedStrings.xml"), "si").map(_.getTextContent).toIndexedSeq
-    val doc = parse(zip, sheetPath)
-    elements(doc, "row").map { row =>
-      val cells = mutable.ArrayBuffer.empty[String]
-      elements(row, "c").foreach { c =>
-        val idx = colIndex(c.getAttribute("r"))
-        while (cells.size <= idx) cells += null
-        val vNode = elements(c, "v").headOption.map(_.getTextContent)
-          .orElse(elements(c, "is").headOption.map(_.getTextContent))
-        cells(idx) = c.getAttribute("t") match {
-          case "s" => vNode.map(v => shared(v.trim.toInt)).orNull
-          case "b" => vNode.map(v => if (v.trim == "1") "true" else "false").orNull
-          case _ => vNode.orNull // inlineStr/str/number: text as written
-        }
-      }
-      cells.toArray
-    }
+      else sharedStrings(zip)
+    sheetRows(zip, sheetPath, shared)
   }
+
+  /** The `<si>` texts in order, each the concatenation of every text node
+    * under it — rich-text runs, phonetic runs and whitespace alike, as
+    * DOM's `getTextContent` gives it. */
+  private def sharedStrings(zip: ZipFile): IndexedSeq[String] = stream(zip, "xl/sharedStrings.xml") { r =>
+    val out = mutable.ArrayBuffer.empty[String]
+    var si: java.lang.StringBuilder = null
+    while (r.hasNext) r.next() match {
+      case START_ELEMENT if named(r, "si") => si = new java.lang.StringBuilder
+      case END_ELEMENT if named(r, "si") => out += si.toString; si = null
+      case CHARACTERS | CDATA | SPACE if si != null => appendText(r, si)
+      case _ =>
+    }
+    out.toIndexedSeq
+  }
+
+  /** Cell grid of one sheet part. A cell's value is the text of its first
+    * `<v>`, else of its first `<is>` (inline string, runs concatenated);
+    * `t="s"` indexes the shared strings, `t="b"` maps 1/0 to true/false,
+    * anything else is the text as written. */
+  private def sheetRows(zip: ZipFile, part: String, shared: IndexedSeq[String]): Seq[Array[String]] =
+    stream(zip, part) { r =>
+      val rows = mutable.ArrayBuffer.empty[Array[String]]
+      var cells: mutable.ArrayBuffer[String] = null // open <row>
+      var inCell, inV, inIs = false // inside a <c>; inside its first <v> / <is>
+      var idx = 0
+      var t = ""
+      var v, inline: java.lang.StringBuilder = null
+      while (r.hasNext) r.next() match {
+        case START_ELEMENT =>
+          if (named(r, "row")) cells = mutable.ArrayBuffer.empty[String]
+          else if (cells != null && !inCell && named(r, "c")) {
+            inCell = true
+            idx = colIndex(attribute(r, "r"))
+            t = attribute(r, "t")
+            v = null; inline = null
+          } else if (inCell && v == null && named(r, "v")) {
+            v = new java.lang.StringBuilder; inV = true
+          } else if (inCell && inline == null && named(r, "is")) {
+            inline = new java.lang.StringBuilder; inIs = true
+          }
+        case CHARACTERS | CDATA | SPACE if inCell =>
+          if (inV) appendText(r, v)
+          if (inIs) appendText(r, inline)
+        case END_ELEMENT =>
+          if (inCell && named(r, "c")) {
+            inCell = false
+            val text = Option(if (v != null) v else inline).map(_.toString)
+            while (cells.size <= idx) cells += null
+            cells(idx) = t match {
+              case "s" => text.map(x => shared(x.trim.toInt)).orNull
+              case "b" => text.map(x => if (x.trim == "1") "true" else "false").orNull
+              case _ => text.orNull // inlineStr/str/number: text as written
+            }
+          } else if (inCell && named(r, "v")) inV = false
+          else if (inCell && named(r, "is")) inIs = false
+          else if (cells != null && named(r, "row")) { rows += cells.toArray; cells = null }
+        case _ =>
+      }
+      rows.toSeq
+    }
 
   /** 0-based column index from an "BC23"-style cell address. */
   private[graft] def colIndex(ref: String): Int = {
@@ -99,10 +152,14 @@ object Xlsx {
     try f(zip) finally zip.close()
   }
 
-  private def parse(zip: ZipFile, entry: String): Element = {
+  private def openPart(zip: ZipFile, entry: String): InputStream = {
     val e = zip.getEntry(entry)
     require(e != null, s"missing xlsx part: $entry")
-    val in: InputStream = zip.getInputStream(e)
+    zip.getInputStream(e)
+  }
+
+  private def parse(zip: ZipFile, entry: String): Element = {
+    val in = openPart(zip, entry)
     try {
       val fac = javax.xml.parsers.DocumentBuilderFactory.newInstance()
       fac.setNamespaceAware(false)
@@ -111,6 +168,54 @@ object Xlsx {
       fac.newDocumentBuilder().parse(in).getDocumentElement
     } finally in.close()
   }
+
+  /** One streaming pass over a part. Namespace-unaware like the DOM path
+    * (names are matched prefix-tolerantly); a DOCTYPE fails the read at
+    * once, and the resolver refuses every external entity, so workbook
+    * content can never make the reader open another resource. */
+  private def stream[A](zip: ZipFile, entry: String)(f: XMLStreamReader => A): A = {
+    val in = openPart(zip, entry)
+    try {
+      val fac = XMLInputFactory.newDefaultFactory()
+      fac.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, false)
+      fac.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+      fac.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+      fac.setXMLResolver((_: String, systemId: String, _: String, _: String) =>
+        throw new XMLStreamException(s"xlsx part $entry: external entity '$systemId' refused"))
+      val r = fac.createXMLStreamReader(in)
+      try {
+        val guarded = new StreamReaderDelegate(r) {
+          override def next(): Int = {
+            val ev = super.next()
+            if (ev == DTD) throw new XMLStreamException(
+              s"xlsx part $entry declares a DOCTYPE; DTDs are not allowed in workbook parts")
+            ev
+          }
+        }
+        f(guarded)
+      } finally r.close()
+    } finally in.close()
+  }
+
+  private def named(r: XMLStreamReader, tag: String): Boolean = {
+    val n = r.getLocalName // the qualified name: the factory is namespace-unaware
+    n == tag || n.endsWith(":" + tag)
+  }
+
+  /** Value of the unprefixed attribute `name`, "" when absent (DOM's
+    * `getAttribute` contract). */
+  private def attribute(r: XMLStreamReader, name: String): String = {
+    var i = 0
+    while (i < r.getAttributeCount) {
+      if (r.getAttributeLocalName(i) == name && Option(r.getAttributePrefix(i)).forall(_.isEmpty))
+        return r.getAttributeValue(i)
+      i += 1
+    }
+    ""
+  }
+
+  private def appendText(r: XMLStreamReader, sb: java.lang.StringBuilder): Unit =
+    sb.append(r.getTextCharacters, r.getTextStart, r.getTextLength)
 
   /** Descendant elements by local tag name (namespace-prefix tolerant). */
   private def elements(root: Element, tag: String): Seq[Element] = {

@@ -1129,6 +1129,15 @@ class PipelineSpec extends SparkSpec {
     assert(ex.getMessage.contains("integral"))
   }
 
+  test("connectedComponents reliable-checkpoint path: self-loops only give an empty result") {
+    // the reliable-checkpoint branch probes emptiness instead of counting
+    // (the context's checkpoint dir is already set by the test above)
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt_empty")
+    val got = Dedup.connectedComponents(Seq((1L, 1L), (2L, 2L)).toDF("a", "b"), "a", "b",
+      checkpointDir = Some(dir.toString))
+    assert(got.columns.toSeq == Seq("id", "cluster_id") && got.isEmpty)
+  }
+
   test("PII redaction: per-class counts and in-place replacement") {
     val df = Seq(
       (1L, "write to alice.smith+news@sub.example.org today"),

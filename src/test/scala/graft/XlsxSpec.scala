@@ -12,11 +12,11 @@ class XlsxSpec extends SparkSpec {
     * strings, numbers, booleans, a sparse row, and out-of-order sheet
     * relationships (rId2 listed first) — the parts a reader must actually
     * resolve rather than assume. */
-  private def writeWorkbook(path: String): Unit = {
+  private def writeWorkbook(path: String, overrides: Map[String, String] = Map.empty): Unit = {
     val zos = new ZipOutputStream(new FileOutputStream(path))
     def part(name: String, body: String): Unit = {
       zos.putNextEntry(new ZipEntry(name))
-      zos.write(("<?xml version=\"1.0\" encoding=\"UTF-8\"?>" + body).getBytes("UTF-8"))
+      zos.write(("<?xml version=\"1.0\" encoding=\"UTF-8\"?>" + overrides.getOrElse(name, body)).getBytes("UTF-8"))
       zos.closeEntry()
     }
     part("[Content_Types].xml",
@@ -100,5 +100,102 @@ class XlsxSpec extends SparkSpec {
     writeWorkbook(wb)
     val e = intercept[IllegalArgumentException](Xlsx.readRows(wb, "nope"))
     assert(e.getMessage.contains("no sheet"))
+  }
+
+  /** The DOM reading the streaming parse replaced, kept as its oracle:
+    * every `<si>`'s `getTextContent`; per `<row>`, each `<c>` at its
+    * address, valued by its first `<v>`, else its first `<is>`. */
+  private def domRows(wb: String, sheetPart: String): Seq[Seq[String]] = {
+    import org.w3c.dom.{Element, Node}
+    val zip = new java.util.zip.ZipFile(wb)
+    try {
+      def doc(entry: String): Element = javax.xml.parsers.DocumentBuilderFactory.newInstance()
+        .newDocumentBuilder().parse(zip.getInputStream(zip.getEntry(entry))).getDocumentElement
+      def elements(root: Node, tag: String): Seq[Element] = {
+        val kids = Iterator.iterate(root.getFirstChild)(_.getNextSibling).takeWhile(_ != null).toSeq
+        kids.flatMap {
+          case el: Element =>
+            val n = el.getTagName
+            (if (n == tag || n.endsWith(":" + tag)) Seq(el) else Nil) ++ elements(el, tag)
+          case _ => Nil
+        }
+      }
+      val shared = elements(doc("xl/sharedStrings.xml"), "si").map(_.getTextContent)
+      elements(doc(sheetPart), "row").map { row =>
+        val cells = scala.collection.mutable.ArrayBuffer.empty[String]
+        elements(row, "c").foreach { c =>
+          val idx = Xlsx.colIndex(c.getAttribute("r"))
+          while (cells.size <= idx) cells += null
+          val text = elements(c, "v").headOption.orElse(elements(c, "is").headOption).map(_.getTextContent)
+          cells(idx) = c.getAttribute("t") match {
+            case "s" => text.map(v => shared(v.trim.toInt)).orNull
+            case "b" => text.map(v => if (v.trim == "1") "true" else "false").orNull
+            case _ => text.orNull
+          }
+        }
+        cells.toSeq
+      }
+    } finally zip.close()
+  }
+
+  private val richShared =
+    """<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
+      |  <si><t>id</t></si><si><t>region</t></si><si><t>amount</t></si>
+      |  <si><r><rPr><b/><sz val="11"/></rPr><t>EM</t></r>
+      |    <r><t xml:space="preserve"> E </t></r><r><t>A</t></r><rPh sb="0" eb="2"><t>エメア</t></rPh>
+      |    <phoneticPr fontId="1"/></si>
+      |  <si><t>AP&amp;AC</t></si>
+      |</sst>""".stripMargin
+
+  test("streaming parse keeps the DOM cell semantics: rich text, formulas, prefixes, CDATA, gaps") {
+    val wb = Files.createTempDirectory("xlsx3").toString + "/book.xlsx"
+    writeWorkbook(wb, Map(
+      "xl/sharedStrings.xml" -> richShared,
+      "xl/worksheets/sheet1.xml" ->
+        """<x:worksheet xmlns:x="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
+          |  <x:sheetData>
+          |    <x:row r="1">
+          |      <x:c r="A1" t="s"><x:v>0</x:v></x:c><x:c r="B1" t="s"><x:v> 3 </x:v></x:c>
+          |      <x:c r="C1" t="inlineStr"><x:is><x:r><x:t>ri</x:t></x:r><x:r><x:t xml:space="preserve">ch </x:t></x:r></x:is></x:c>
+          |    </x:row>
+          |    <x:row r="2"/>
+          |    <x:row r="3">
+          |      <x:c r="A3"><x:f>SUM(A1:A2)</x:f><x:v>3</x:v></x:c>
+          |      <x:c r="B3" t="str"><x:v><![CDATA[a<b]]> &amp; &#x1D4B3;</x:v></x:c>
+          |      <x:c r="D3" t="b"><x:v> 1</x:v></x:c><x:c r="E3" t="n"/>
+          |      <x:c r="F3" t="inlineStr"><x:is><x:t>
+          |  spaced  </x:t></x:is></x:c><x:c r="G3" t="s"><x:v>4</x:v></x:c>
+          |    </x:row>
+          |  </x:sheetData>
+          |</x:worksheet>""".stripMargin))
+    val got = Xlsx.readRows(wb, "sales").map(_.toSeq)
+    assert(got == domRows(wb, "xl/worksheets/sheet1.xml"))
+    // runs, phonetic runs and the whitespace between them, as getTextContent gave
+    assert(got(0) == Seq("id", "EM\n     E Aエメア\n    ", "rich ") && got(1).isEmpty)
+    assert(got(2) == Seq("3", "a<b & \uD835\uDCB3", null, "true", null, "\n  spaced  ", "AP&AC"))
+    // the default workbook agrees with the oracle too
+    val plain = Files.createTempDirectory("xlsx4").toString + "/book.xlsx"
+    writeWorkbook(plain)
+    for ((sheet, part) <- Seq("sales" -> "sheet1", "refunds" -> "sheet2"))
+      assert(Xlsx.readRows(plain, sheet).map(_.toSeq) == domRows(plain, s"xl/worksheets/$part.xml"))
+  }
+
+  test("a DOCTYPE with an external entity fails the sheet and shared-strings parts, unresolved") {
+    val dir = Files.createTempDirectory("xlsx_xxe")
+    val secret = dir.resolve("secret.txt")
+    Files.write(secret, "TOP-SECRET-CONTENT".getBytes("UTF-8"))
+    val doctype = s"""<!DOCTYPE x [<!ENTITY xxe SYSTEM "${secret.toUri}">]>"""
+    val sheet = doctype +
+      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
+        |<row r="1"><c r="A1" t="inlineStr"><is><t>&xxe;</t></is></c></row></sheetData></worksheet>""".stripMargin
+    val shared = doctype +
+      """<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><si><t>&xxe;</t></si></sst>"""
+    for ((part, body) <- Seq("xl/worksheets/sheet1.xml" -> sheet, "xl/sharedStrings.xml" -> shared)) {
+      val wb = dir.resolve(s"book${part.length}.xlsx").toString
+      writeWorkbook(wb, Map(part -> body))
+      val e = intercept[javax.xml.stream.XMLStreamException](Xlsx.readRows(wb, "sales"))
+      assert(e.getMessage.contains("DOCTYPE") && e.getMessage.contains(part), e.getMessage)
+      assert(!e.getMessage.contains("TOP-SECRET"))
+    }
   }
 }
