@@ -6,7 +6,21 @@ import org.apache.spark.sql.SparkSession
   * and prints ONE JSON line {"metric":...,"queries":{name:sec}}. Per-query
   * progress goes to stderr so partial results survive a timeout. */
 object Bench {
+  val Usage: String =
+    "usage: Bench [queryPrefix ...]  (no prefix runs every query; SPARK_GRAFT_SF_DIR picks the data)"
+
+  /** The query-name prefixes to run, or why they are refused: a flag, or
+    * a prefix no query name starts with (either would run nothing). */
+  def parseArgs(args: Seq[String]): Either[String, Seq[String]] =
+    SparkEntry.refusePrefixes(args).toLeft(args)
+
   def main(args: Array[String]): Unit = {
+    val prefixes = parseArgs(args.toSeq) match {
+      case Left(err) =>
+        System.err.println(s"Bench: $err\n$Usage")
+        sys.exit(2)
+      case Right(p) => p
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Bench owns its scratch dirs: Spark's shutdown-hook deleteRecursively
@@ -64,8 +78,8 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => () }
 
     // optional name-prefix filter arg for dev loops; the driver passes none
-    val defs = if (args.isEmpty) SparkEntry.allDefs
-      else SparkEntry.allDefs.filter(d => args.exists(d.name.startsWith))
+    val defs = if (prefixes.isEmpty) SparkEntry.allDefs
+      else SparkEntry.allDefs.filter(d => prefixes.exists(d.name.startsWith))
 
     // Single-run numbers in this container swing ~2x with unchanged code
     // (ambient noise), so queries slower than REPEAT_FLOOR are run 3x and

@@ -21,6 +21,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(d => d.name -> d.run).toMap
 
+  /** Why `prefixes` cannot select queries, if one of them is flag-like
+    * or starts no query name — for the mains that take name prefixes. */
+  def refusePrefixes(prefixes: Seq[String]): Option[String] =
+    prefixes.collectFirst {
+      case flag if flag.startsWith("-") => s"unknown option '$flag'"
+      case p if !allDefs.exists(_.name.startsWith(p)) => s"no query name starts with '$p'"
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.text.TextAnalysis
 
 /** Deduplication operators for LLM training corpora.
@@ -588,6 +589,44 @@ object Dedup {
 
   // ---------------- duplicate clustering (connected components) ----------------
 
+  /** Rejects a non-integral id column. A silent cast would turn
+    * un-castable strings into NULLs (dropping their edges) and truncate
+    * doubles (1.2 and 1.7 becoming one node 1): callers with such ids
+    * should hash or dictionary-encode them first and get an error here,
+    * not a quietly wrong clustering. */
+  private def requireIntegral(op: String, df: DataFrame, cols: String*): Unit =
+    cols.foreach { c =>
+      val dt = df.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+        s"$op: id column '$c' must be an integral type, got $dt " +
+          "(hash or dictionary-encode string ids first)")
+    }
+
+  /** The answer-sized gate behind [[connectedComponents]] and
+    * [[deltaComponents]], and the only reader of `graft.cc.driverEdgeCap`
+    * (default 100k rows ≈ 1.6 MB of id pairs, inside the broadcast
+    * build-side contract; clamped to [0, Int.MaxValue - 1], the largest
+    * limit a probe can take).
+    *
+    * `df` is landed once — an eager `localCheckpoint` — and a
+    * `limit(cap + 1)` probe reads the landed blocks in one task. At or
+    * under the cap the probe's rows come back (Left) for the driver; over
+    * it the landed frame does (Right), non-empty, and the distributed path
+    * continues from it, so `df`'s plan runs once on either side of the
+    * cap. With a reliable `checkpointDir` the caller asked for durable
+    * artifacts: `df` lands through `checkpoint()` and is returned
+    * unprobed. The gate is a measured row count, never local mode, so a
+    * corpus-scale input keeps the distributed shape. */
+  private def collectIfUnder(df: DataFrame,
+      checkpointDir: Option[String]): Either[Array[Row], DataFrame] = {
+    if (checkpointDir.isDefined) return Right(df.checkpoint(true))
+    val landed = df.localCheckpoint(true)
+    val cap = df.sparkSession.conf.get("graft.cc.driverEdgeCap", "100000").toLong
+      .max(0L).min(Int.MaxValue - 1L)
+    val probe = landed.coalesce(1).limit(cap.toInt + 1).collect()
+    if (probe.length <= cap) Left(probe) else Right(landed)
+  }
+
   /** Connected components over an undirected pair list — the operator that
     * turns near-duplicate PAIRS into duplicate CLUSTERS (transitive
     * closure), making "keep one per cluster" principled: pair-wise removal
@@ -609,104 +648,49 @@ object Dedup {
     * needs a 64-bit xor collision on top of an identical edge count.
     *
     * Input rows are (aCol, bCol) node pairs; self-pairs are dropped. The
-    * id columns must already be integral (byte/short/int/long): a silent
-    * cast from string/double would turn un-castable ids into NULLs and
-    * drop their edges — callers with string ids should hash or
-    * dictionary-encode them first and get an error here, not a quietly
-    * wrong clustering.
+    * id columns must already be integral (byte/short/int/long).
     *
     * `checkpointDir`: lineage must be truncated every round or iterative
-    * DataFrame plans grow without bound. By default the truncation is an
-    * eager `localCheckpoint` — executor-local blocks, correct locally and
+    * DataFrame plans grow without bound. By default the truncation is a
+    * `localCheckpoint` — executor-local blocks, correct locally and
     * cheapest, but on a real cluster they die with their executor and a
     * 50-round job would restart from nothing. Pass a reliable location
     * (HDFS/object store) to use `checkpoint()` instead; the dir is set on
     * the SparkContext if none is configured yet.
     *
-    * Answer-sized inputs (at most `graft.cc.driverEdgeCap` distinct
-    * canonical edges, default 100k ≈ 1.6 MB — well inside the broadcast
-    * build-side contract) skip the fixpoint: the edge set is collected,
-    * solved with a min-rooted union-find, and returned as a local
-    * relation. Identical labels by construction (both paths converge to
-    * component minima; the random-graph spec pins the identity), and the
-    * per-round scheduling floor — the whole cost at delta/rep-graph
-    * sizes — vanishes. The gate is a measured row count, so a 100 TB
-    * corpus-wide pair graph takes the distributed fixpoint unchanged.
+    * The canonical edge set passes the answer-sized gate
+    * ([[collectIfUnder]]): at or under the cap it is solved on the driver
+    * with a [[UnionFind]] and returned as a local relation — identical
+    * labels, since both paths converge to component minima, without the
+    * fixpoint's per-round scheduling floor. Over the cap, or with a
+    * reliable `checkpointDir`, the fixpoint runs on the landed edges.
     *
     * Returns (id, cluster_id) — one row per node appearing in `pairs`,
     * cluster_id = the minimum id of the node's component. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    Seq(aCol, bCol).foreach { c =>
-      import org.apache.spark.sql.types._
-      val dt = pairs.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"connectedComponents: id column '$c' must be an integral type, got $dt " +
-          "(hash or dictionary-encode string ids first)")
-    }
-    val sc = pairs.sparkSession.sparkContext
+    requireIntegral("connectedComponents", pairs, aCol, bCol)
+    val s = pairs.sparkSession
+    import s.implicits._
     checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    val empty = {
-      val s = pairs.sparkSession
-      import s.implicits._
-      Seq.empty[(Long, Long)].toDF("id", "cluster_id")
+      if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
     }
     // canonical u < v edges
-    var edges = truncate(pairs
+    val canonical = pairs
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct())
-    // Only the driver path's gate needs the measured count. Reliable-
-    // checkpoint callers always run distributed, so for them emptiness
-    // (a one-row probe) is all that matters, not a scan of every edge.
-    val nEdges =
-      if (checkpointDir.isEmpty) edges.count() // one cheap job over the eager checkpoint
-      else if (edges.isEmpty) 0L else Long.MaxValue
-    if (nEdges == 0) return empty
-
-    // ANSWER-SIZED PATH (guide §2.4/§3.1): at or below the cap the edge
-    // set is collected and solved with a min-rooted union-find — exactly
-    // the size contract of a broadcast hash join's build side (the
-    // deltaComponents fold already broadcasts these same tables), and the
-    // result re-enters the plan as a local relation downstream joins
-    // broadcast. The distributed fixpoint below is unchanged and remains
-    // the over-cap path (a corpus-wide pair graph at 100 TB); delta/rep
-    // graphs are answer-sized BY CONTRACT at any scale, and for them the
-    // fixpoint's per-round cost is pure scheduling (~5 exchanges + an AQE
-    // re-plan per round — StreamCcProbe), not data. Gated on a MEASURED
-    // count, never on local mode; reliable-checkpoint callers always run
-    // distributed (they asked for durable per-round artifacts).
-    val driverCap = pairs.sparkSession.conf
-      .get("graft.cc.driverEdgeCap", "100000").toLong
-    if (checkpointDir.isEmpty && nEdges <= driverCap) {
-      val parent = new scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val n = parent(c); parent.update(c, r); c = n }
-        r
-      }
-      edges.collect().foreach { row =>
-        val u = row.getLong(0); val v = row.getLong(1)
-        if (!parent.contains(u)) parent.update(u, u)
-        if (!parent.contains(v)) parent.update(v, v)
-        val ru = find(u); val rv = find(v)
-        // the smaller root wins every union, so by induction each tree's
-        // root IS the minimum id of its members — cluster_id = find(id)
-        if (ru < rv) parent.update(rv, ru)
-        else if (rv < ru) parent.update(ru, rv)
-      }
-      val s = pairs.sparkSession
-      import s.implicits._
-      return parent.keys.toArray.sorted.toSeq
-        .map(id => (id, find(id))).toDF("id", "cluster_id")
+      .distinct()
+    var edges = collectIfUnder(canonical, checkpointDir) match {
+      case Left(rows) =>
+        val uf = new UnionFind
+        rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+        return uf.labels.toSeq.toDF("id", "cluster_id")
+      case Right(landed) => landed
     }
+    // only the unprobed reliable-checkpoint frame can still be empty
+    if (checkpointDir.isDefined && edges.isEmpty)
+      return Seq.empty[(Long, Long)].toDF("id", "cluster_id")
 
     def bothDirs(e: DataFrame) =
       e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -716,9 +700,9 @@ object Dedup {
     // m ≤ u < v, smallStar emits m < v and m < u): bothDirs(e)'s
     // `v > u` half IS e and its `v < u` half IS flip(e), so the join
     // probe sides ship |e| rows instead of 2|e| and the post-join
-    // direction filters vanish (CcCostProbe: −18/−25% on the 200k-edge
-    // and answer-sized loads, output-identity asserted). Only the
-    // min-neighbor aggregate still reads both directions.
+    // direction filters vanish (OPTIMIZATION_r15.md: −18/−25% on the
+    // 200k-edge and answer-sized loads, output-identity asserted). Only
+    // the min-neighbor aggregate still reads both directions.
 
     // large-star: every neighbor v > u re-links to m = min(Γ(u) ∪ {u}).
     // m ≤ u < v, so (m, v) is already canonical.
@@ -775,107 +759,79 @@ object Dedup {
     * connects them, and every standing component is already summarized
     * by its representative — so it suffices to (1) map the delta pairs'
     * endpoints to their standing reps (nodes the map has never seen are
-    * their own rep), (2) run the fixpoint over the DELTA-SIZED rep
-    * graph, and (3) relabel. Exactness: a standing rep is its
-    * component's minimum node id, and a fresh node's rep is itself, so
-    * the min over merged reps IS the min over the union component's
-    * members — the incremental labels equal a full recompute's, node
-    * for node (the oracle checks precisely that identity).
+    * their own rep), (2) solve the DELTA-SIZED rep graph, and (3)
+    * relabel. Exactness: a standing rep is its component's minimum node
+    * id, and a fresh node's rep is itself, so the min over merged reps IS
+    * the min over the union component's members — the incremental labels
+    * equal a full recompute's, node for node (the oracle checks precisely
+    * that identity).
     *
     * Scale shape: the standing map is touched by exactly two scans and
     * ZERO exchanges (a broadcast-semi probe for the endpoints' reps —
     * the q197 visited-index discipline — and one relabel scan joined
-    * against the broadcast answer-sized merge table); the fixpoint runs
-    * over the rep graph, bounded by the DELTA's pair count, never the
-    * corpus's. Delta pairs internal to one standing component collapse
-    * to self-loops and cost nothing.
+    * against the broadcast answer-sized merge table); the rep graph is
+    * bounded by the DELTA's pair count, never the corpus's. Delta pairs
+    * internal to one standing component collapse to self-loops and cost
+    * nothing.
     *
-    * Returns (node, old_rep, new_rep) for every node whose label
-    * CHANGES: members of standing components that merged, plus fresh
-    * nodes attaching to anything smaller than themselves (their old_rep
-    * is themselves). Apply with a keyed upsert into the standing map;
-    * unchanged nodes never ship. */
+    * The delta pairs pass the answer-sized gate ([[collectIfUnder]]). At
+    * or under the cap the whole fold is orchestrated on the driver: one
+    * probe scan collects the touched reps, a [[UnionFind]] merges them,
+    * and the merge table feeds the relabel scan. Over the cap the
+    * distributed fold continues from the gate's landed pairs, so the
+    * pair plan is never re-run. All four id columns must be integral.
+    *
+    * Returns (node, old_rep, new_rep), all long, for every node whose
+    * label CHANGES: members of standing components that merged, plus
+    * fresh nodes attaching to anything smaller than themselves (their
+    * old_rep is themselves). Apply with a keyed upsert into the standing
+    * map; unchanged nodes never ship. */
   def deltaComponents(standingMap: DataFrame, deltaPairs: DataFrame,
       checkpointDir: Option[String] = None): DataFrame = {
+    requireIntegral("deltaComponents", standingMap, "id", "cluster_id")
+    requireIntegral("deltaComponents", deltaPairs, "id_a", "id_b")
+    val session = deltaPairs.sparkSession
+    import session.implicits._
     val sm = standingMap.select(col("id"), col("cluster_id"))
-    val pairs0 = deltaPairs.select(col("id_a"), col("id_b"))
+    // the relabel: ONE standing-map scan against a broadcast merge table
+    def relabel(merges: DataFrame): DataFrame = sm
+      .join(broadcast(merges), sm("cluster_id") === merges("rep"))
+      .select(sm("id").cast("long").as("node"),
+        sm("cluster_id").cast("long").as("old_rep"), col("new_rep"))
+    val pairs0 = deltaPairs
+      .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
 
-    // ANSWER-SIZED PATH (r16 — the connectedComponents gate applied to
-    // the whole fold): the delta pairs, the touched-rep table, and the
-    // merge table are all delta-sized BY CONTRACT, and the distributed
-    // shape below already ships every one of them through driver-built
-    // broadcasts — so at or below the cap the ORCHESTRATION runs on the
-    // driver instead of through ~10 answer-sized jobs (per-shard fold
-    // cost is scheduling, not data: StreamCcProbe read the q228 fold at
-    // 7.6 s with a near-free fixpoint). The standing map keeps its scale
-    // contract exactly: ONE distributed broadcast-semi probe scan + ONE
-    // relabel scan, never shuffled, never collected. Over-cap deltas run
-    // the distributed shape below unchanged.
-    val session = deltaPairs.sparkSession
-    val cap = math.min(session.conf.get("graft.cc.driverEdgeCap", "100000").toLong,
-      (Int.MaxValue - 1).toLong)
-    val probe: Array[org.apache.spark.sql.Row] =
-      if (checkpointDir.isEmpty && cap > 0)
-        pairs0.select(col("id_a").cast("long"), col("id_b").cast("long"))
-          .limit(cap.toInt + 1).collect()
-      else null
-    if (probe != null && probe.length <= cap) {
-      import session.implicits._
-      val pairsArr = probe.map(r => (r.getLong(0), r.getLong(1)))
-      val endpoints = pairsArr.iterator
-        .flatMap(p => Iterator(p._1, p._2)).toArray.distinct.sorted
-      val rep = new scala.collection.mutable.LongMap[Long]()
-      endpoints.foreach(id => rep.update(id, id))
-      // the ONE standing probe scan: reps for the touched ids
-      val touched: Array[(Long, Long)] =
-        if (endpoints.isEmpty) Array.empty
-        else sm.join(broadcast(endpoints.toSeq.toDF("id")), Seq("id"), "left_semi")
-          .select(col("id").cast("long"), col("cluster_id").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-      touched.foreach { case (id, cl) => rep.update(id, cl) }
-      // min-rooted union-find over the rep graph (roots are component
-      // minima — the same invariant as the answer-sized CC path)
-      val parent = new scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r0 = x; while (parent(r0) != r0) r0 = parent(r0)
-        var c = x; while (c != r0) { val n = parent(c); parent.update(c, r0); c = n }
-        r0
-      }
-      pairsArr.foreach { case (a, b) =>
-        val (ra, rb) = (rep(a), rep(b))
-        if (ra != rb) {
-          if (!parent.contains(ra)) parent.update(ra, ra)
-          if (!parent.contains(rb)) parent.update(rb, rb)
-          val (fa, fb) = (find(ra), find(rb))
-          if (fa < fb) parent.update(fb, fa)
-          else if (fb < fa) parent.update(fa, fb)
-        }
-      }
-      val changedArr = parent.keys.toArray.sorted
-        .flatMap { r0 => val f = find(r0); if (f != r0) Some((r0, f)) else None }
-      val changedDf = changedArr.toSeq.toDF("rep", "new_rep")
-      val changedMap = changedArr.toMap
-      val touchedIds = touched.map(_._1).toSet
-      // fresh nodes (never in the map) relabel right here on the driver
-      val fromFreshLocal = endpoints.iterator
-        .filter(id => !touchedIds.contains(id))
-        .flatMap(id => changedMap.get(rep(id)).map(nr => (id, id, nr)))
-        .toSeq.toDF("node", "old_rep", "new_rep")
-      // …while the relabel stays ONE distributed standing-map scan
-      val fromStandingD = sm
-        .join(broadcast(changedDf), sm("cluster_id") === changedDf("rep"))
-        .select(sm("id").cast("long").as("node"),
-          sm("cluster_id").cast("long").as("old_rep"), col("new_rep"))
-      return fromStandingD.unionByName(fromFreshLocal)
+    val pairs = collectIfUnder(pairs0, checkpointDir) match {
+      case Left(rows) =>
+        val pairsArr = rows.map(r => (r.getLong(0), r.getLong(1)))
+        val endpoints = pairsArr.flatMap(p => Array(p._1, p._2)).distinct.sorted
+        // the ONE standing probe scan: reps for the touched ids
+        val touched: Array[(Long, Long)] =
+          if (endpoints.isEmpty) Array.empty
+          else sm.join(broadcast(endpoints.toSeq.toDF("id")), Seq("id"), "left_semi")
+            .select(col("id").cast("long"), col("cluster_id").cast("long"))
+            .collect().map(r => (r.getLong(0), r.getLong(1)))
+        val rep = scala.collection.mutable.LongMap.from(endpoints.map(id => id -> id) ++ touched)
+        val uf = new UnionFind
+        pairsArr.foreach { case (a, b) => uf.union(rep(a), rep(b)) }
+        val merges = uf.labels.filter { case (r, root) => r != root }
+        val newRep = merges.toMap
+        val standingIds = touched.iterator.map(_._1).toSet
+        // fresh nodes (never in the map, so their own rep) relabel here
+        val fromFresh = endpoints.iterator
+          .filter(id => !standingIds.contains(id))
+          .flatMap(id => newRep.get(id).map(nr => (id, id, nr)))
+          .toSeq.toDF("node", "old_rep", "new_rep")
+        return relabel(merges.toSeq.toDF("rep", "new_rep")).unionByName(fromFresh)
+      case Right(landed) => landed
     }
 
-    // All four landed intermediates below are LAZY checkpoints: each
+    // The three landed intermediates below are LAZY checkpoints: each
     // one's first consumer is a full scan (a distinct or a broadcast
     // build), so the materialization rides that job instead of paying a
-    // separate eager job per table — four scheduling round-trips saved
-    // per delta fold, which is the dominant cost at answer-sized deltas.
-    val pairs = pairs0.localCheckpoint(false)
+    // separate eager job per table — scheduling round-trips are the
+    // dominant cost at answer-sized deltas.
     val endpoints = pairs.select(col("id_a").as("id"))
       .unionByName(pairs.select(col("id_b").as("id"))).distinct()
     // the standing map's reps for delta-touched ids: endpoint keys
@@ -891,23 +847,42 @@ object Dedup {
       .join(broadcast(epReps.select(col("id").as("id_a"), col("rep").as("ra"))), "id_a")
       .join(broadcast(epReps.select(col("id").as("id_b"), col("rep").as("rb"))), "id_b")
       .select(col("ra"), col("rb")).filter(col("ra") =!= col("rb")).distinct()
-    // the fixpoint over the delta-sized rep graph; reps whose label
+    // the components of the delta-sized rep graph; reps whose label
     // moves are exactly the merge events (answer-sized)
-    val changed = connectedComponents(repGraph, "ra", "rb",
+    val merges = connectedComponents(repGraph, "ra", "rb",
         checkpointDir = checkpointDir)
       .filter(col("cluster_id") =!= col("id"))
       .select(col("id").as("rep"), col("cluster_id").as("new_rep"))
       .localCheckpoint(false)
-    // relabel: one standing-map scan against the broadcast merge table…
-    val fromStanding = sm
-      .join(broadcast(changed), sm("cluster_id") === changed("rep"))
-      .select(sm("id").as("node"), sm("cluster_id").as("old_rep"),
-        col("new_rep"))
-    // …plus the fresh nodes (never in the map): old label = themselves
+    // the fresh nodes (never in the map): old label = themselves
     val fromFresh = epReps
       .join(broadcast(smTouched.select(col("id"))), Seq("id"), "left_anti")
-      .join(broadcast(changed), Seq("rep"))
+      .join(broadcast(merges), Seq("rep"))
       .select(col("id").as("node"), col("id").as("old_rep"), col("new_rep"))
-    fromStanding.unionByName(fromFresh)
+    relabel(merges).unionByName(fromFresh)
   }
+}
+
+/** Min-rooted union-find over long ids with path compression. Every union
+  * points the larger root at the smaller, so by induction each root is
+  * the minimum id of its set: `find(x)` is x's component minimum, the
+  * label the distributed fixpoint converges to. Ids join on first sight. */
+private[graft] final class UnionFind {
+  private val parent = new scala.collection.mutable.LongMap[Long]()
+
+  def find(x: Long): Long = {
+    var r = x
+    while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+    var c = x
+    while (c != r) { val n = parent(c); parent.update(c, r); c = n }
+    r
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    val (ra, rb) = (find(a), find(b))
+    if (ra < rb) parent.update(rb, ra) else if (rb < ra) parent.update(ra, rb)
+  }
+
+  /** (id, component minimum) for every id seen, in id order. */
+  def labels: Array[(Long, Long)] = parent.keys.toArray.sorted.map(x => (x, find(x)))
 }

@@ -8,6 +8,7 @@ import graft.{GraftSession, SparkEntry}
   * small, whole-stage codegen coverage.
   *
   * Run: sbt "runMain graft.examples.PlanCheck [queryName ...]"
+  * (unknown names and flags are refused with usage text and exit 2)
   */
 object PlanCheck {
   private case class Want(query: String, mustContain: Seq[(String, String)],
@@ -1196,7 +1197,22 @@ object PlanCheck {
       mustNotContain = Seq(
         "no cartesian" -> "CartesianProduct")))
 
+  val Usage: String =
+    "usage: PlanCheck [queryName ...]  (no name runs every audit; SPARK_GRAFT_SF_DIR picks the data)"
+
+  /** The audited query names to check, or why they are refused: a flag,
+    * or a name with no plan audit (it would be checked against nothing). */
+  def parseArgs(args: Seq[String]): Either[String, Seq[String]] =
+    args.collectFirst {
+      case flag if flag.startsWith("-") => s"unknown option '$flag'"
+      case name if !audits.exists(_.query == name) => s"no plan audit for '$name'"
+    }.toLeft(args)
+
   def main(args: Array[String]): Unit = {
+    parseArgs(args.toSeq).left.foreach { err =>
+      System.err.println(s"PlanCheck: $err\n$Usage")
+      sys.exit(2)
+    }
     val spark = GraftSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val wanted = if (args.nonEmpty) audits.filter(a => args.contains(a.query)) else audits

@@ -28,13 +28,6 @@ class DriverPathSpec extends SparkSpec {
 
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   private def assertSameAsSpark(dir: String, name: String): Unit = {
     assert(ParquetFooterSchema(spark, Tables.path(dir, name)).isDefined, s"$dir/$name fell back to Spark")
     val (loaded, n) = jobs(Tables.load(spark, dir, name))

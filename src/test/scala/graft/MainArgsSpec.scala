@@ -1,0 +1,42 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.examples.PlanCheck
+
+/** The command-line mains refuse arguments that would do nothing or the
+  * wrong thing, instead of running zero queries or dying mid-way. */
+class MainArgsSpec extends AnyFunSuite {
+
+  test("Verify takes <sfDir> <outDir> [queryPrefix ...] and refuses bad arity, flags and unknown prefixes") {
+    assert(Verify.parseArgs(Seq("/sf", "/out")) == Right(("/sf", "/out", Nil)))
+    assert(Verify.parseArgs(Seq("/sf", "/out", "q69", "q22")) == Right(("/sf", "/out", Seq("q69", "q22"))))
+    for (args <- Seq(Nil, Seq("/sf")))
+      assert(Verify.parseArgs(args).left.exists(_.contains("expected <sfDir> <outDir>")), args)
+    for (args <- Seq(Seq("--help"), Seq("/sf", "/out", "-v"), Seq("-o", "/sf", "/out")))
+      assert(Verify.parseArgs(args).left.exists(_.contains("unknown option")), args)
+    assert(Verify.parseArgs(Seq("/sf", "/out", "q69", "zz_nothing"))
+      .left.exists(_.contains("no query name starts with 'zz_nothing'")))
+    assert(Verify.Usage.startsWith("usage: Verify"))
+  }
+
+  test("Bench takes query prefixes and refuses flags and prefixes that match no query") {
+    assert(Bench.parseArgs(Nil) == Right(Nil))
+    assert(Bench.parseArgs(Seq("q69", "q1_")) == Right(Seq("q69", "q1_")))
+    for (args <- Seq(Seq("--help"), Seq("-h"), Seq("q69", "--sf")))
+      assert(Bench.parseArgs(args).left.exists(_.contains("unknown option")), args)
+    assert(Bench.parseArgs(Seq("q69", "nope")).left.exists(_.contains("no query name starts with 'nope'")))
+    assert(Bench.Usage.startsWith("usage: Bench"))
+  }
+
+  test("PlanCheck takes audited query names and refuses flags and names without an audit") {
+    val names = Seq("q125_corpus_pipeline", "q226_delta_components", "q236_compact_components")
+    assert(PlanCheck.parseArgs(Nil) == Right(Nil))
+    assert(PlanCheck.parseArgs(names) == Right(names))
+    assert(PlanCheck.parseArgs(Seq("--help")).left.exists(_.contains("unknown option")))
+    // a real query with no audit, and a prefix of an audited name
+    for (name <- Seq("q69_dup_clusters", "q125"))
+      assert(PlanCheck.parseArgs(names :+ name).left.exists(_.contains(s"no plan audit for '$name'")), name)
+    assert(PlanCheck.Usage.startsWith("usage: PlanCheck"))
+  }
+}

@@ -1019,21 +1019,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("connectedComponents matches union-find on random graphs, chains and hubs") {
-    def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      // path-compress fully, then label every node by its root (= min id,
-      // because unions always point the larger root at the smaller)
-      nodes.map(v => v -> find(v)).toMap
-    }
     val rnd = new scala.util.Random(7)
     val cases = Seq(
       // long chain: the O(diameter) killer for label propagation
@@ -1043,7 +1028,7 @@ class PipelineSpec extends SparkSpec {
       // random sparse graph (with self-loops and duplicate/reversed edges)
       Seq.fill(300)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong)))
     for (edges <- cases) {
-      val expected = unionFind(0, edges.filter(e => e._1 != e._2))
+      val expected = PipelineSpec.unionFind(edges.filter(e => e._1 != e._2))
       val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
       assert(got == expected)
@@ -1069,9 +1054,9 @@ class PipelineSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val local = rows(Dedup.deltaComponents(sm, dp))
-    spark.conf.set("graft.cc.driverEdgeCap", "0")
-    try assert(local == rows(Dedup.deltaComponents(sm, dp)))
-    finally spark.conf.unset("graft.cc.driverEdgeCap")
+    withConf("graft.cc.driverEdgeCap", "0") {
+      assert(local == rows(Dedup.deltaComponents(sm, dp)))
+    }
   }
 
   test("connectedComponents: answer-sized union-find path ≡ distributed fixpoint") {
@@ -1087,17 +1072,10 @@ class PipelineSpec extends SparkSpec {
       val df = edges.toDF("a", "b")
       val local = Dedup.connectedComponents(df, "a", "b")
         .as[(Long, Long)].collect().toMap
-      val cap0 = spark.conf.getOption("graft.cc.driverEdgeCap")
-      spark.conf.set("graft.cc.driverEdgeCap", "0")
-      try {
+      withConf("graft.cc.driverEdgeCap", "0") {
         val dist = Dedup.connectedComponents(df, "a", "b")
           .as[(Long, Long)].collect().toMap
         assert(local == dist)
-      } finally {
-        cap0 match {
-          case Some(v) => spark.conf.set("graft.cc.driverEdgeCap", v)
-          case None => spark.conf.unset("graft.cc.driverEdgeCap")
-        }
       }
     }
   }
@@ -1411,5 +1389,26 @@ class PipelineSpec extends SparkSpec {
       a.indices.map(i => a(i) * b(i)).sum
     val (a, c) = (codes(Array(0.99f, 0.10f)), codes(Array(0.50f, -0.80f)))
     assert(got(1)._4 == got(1)._3 - dot(c, a))
+  }
+}
+
+object PipelineSpec {
+  /** Reference connected components for driver-side checks: a recursive
+    * union-find over a map, labelling every endpoint of `edges` with its
+    * component minimum. */
+  def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    // path-compress fully, then label every node by its root (= min id,
+    // because unions always point the larger root at the smaller)
+    nodes.map(v => v -> find(v)).toMap
   }
 }

@@ -16,4 +16,13 @@ abstract class SparkSpec extends AnyFunSuite {
   // resolved at this suite's first test so a prior suite's stop() is safe
   lazy val spark: SparkSession = TestSession.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with session conf `key` set to `value`, then restores the
+    * value set before (or unsets the key if there was none). */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
