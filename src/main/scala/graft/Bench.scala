@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line {"metric":...,"queries":{name:sec}}. Per-query
@@ -101,15 +103,27 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory
       .getPlatformMXBean(classOf[com.sun.management.OperatingSystemMXBean])
 
+    // Janino compilations per query: (first run's count, later runs'
+    // count, compile ms over all runs). A later run that compiles again
+    // means a generated-class cache smaller than the working set, or a
+    // plan whose generated code differs from call to call.
+    val codegen = scala.collection.mutable.Map[String, (Long, Long, Double)]()
     val REPEAT_FLOOR = 0.5
     def once(d: QueryDef): (Double, Double, Long) = {
+      val k0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
       val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       val n = try d.run(spark, sfDir).count() catch {
         case e: Throwable =>
           System.err.println(s"[bench] ${d.name} FAILED: ${e.getMessage}"); -1L
       }
-      ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9, n)
+      val out = ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9, n)
+      val k = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - k0
+      val ms = (CodeGenerator.compileTime - ns0) / 1e6
+      codegen(d.name) = codegen.get(d.name)
+        .fold((k, 0L, ms)) { case (first, later, m) => (first, later + k, m + ms) }
+      out
     }
     val firstPass = defs.map { d =>
       // Measurement hygiene (r16, guide §1): by the 190th query the 8 GB
@@ -300,7 +314,9 @@ object Bench {
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { path =>
       def obj(f: ((String, Double, Double, Double)) => Double): String =
         results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(_._2)},"queries_min":${obj(_._3)},"queries_cpu":${obj(_._4)},"total_cpu":$totalCpu,"repeats":3,"sf":"$sfDir","stalled":${stalled.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+      def codegenObj(f: ((Long, Long, Double)) => String): String =
+        results.map(r => "\"" + r._1 + "\":" + f(codegen(r._1))).mkString("{", ",", "}")
+      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(_._2)},"queries_min":${obj(_._3)},"queries_cpu":${obj(_._4)},"queries_compiles":${codegenObj(c => s"[${c._1},${c._2}]")},"queries_compile_ms":${codegenObj(c => r2(c._3).toString)},"total_cpu":$totalCpu,"repeats":3,"sf":"$sfDir","stalled":${stalled.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }

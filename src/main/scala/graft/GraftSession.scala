@@ -21,6 +21,19 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
+      // Spark's LRU cache of compiled generated classes is JVM-wide and
+      // sized once, when the first class compiles (a static conf: only the
+      // builder can set it). Its default of 100 entries is smaller than
+      // graft's working sets: one pass of the benchmark's graph ops
+      // (connectedComponents on both sides of the cap, PageRank,
+      // minHashPairs) generates ≈150 distinct classes, so at 100 every
+      // pass recompiled ≈120 of them through Janino and the JIT compiled
+      // them again. The interactive workbench needs ≈75; a JVM that runs
+      // all 239 queries (Bench, Verify, the tests) needs more. 1000 holds
+      // each of these with headroom. An entry costs ≈27 KB of heap
+      // (measured: dropping 167–179 entries freed 4.8–4.9 MB), so a full
+      // cache stays under 30 MB.
+      .config("spark.sql.codegen.cache.maxEntries", 1000)
       // TIMESTAMP(NANOS) parquet (the events table) reads as long;
       // Tables.load truncates to micros. Session-construction-time setting
       // — there is no per-read option for it, and mutating a shared session

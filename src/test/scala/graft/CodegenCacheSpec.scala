@@ -1,0 +1,101 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.JobCount
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.catalog.Catalog
+import graft.dedup.Dedup
+import graft.ops.PageRank
+
+/** Generated code compiles once per JVM: the session's class cache holds
+  * the iterative families' working set, so a repeated pass over freshly
+  * read inputs reuses every class it compiled, and `primaryKeyCandidates`
+  * plans the same code on every call. */
+class CodegenCacheSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Janino compilations the block caused. */
+  private def compiles(body: => Any): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  private lazy val dir = Files.createTempDirectory("codegen_cache").toString
+
+  private def save(df: DataFrame, name: String): String = {
+    val p = s"$dir/$name.parquet"
+    df.repartition(2).write.mode("overwrite").parquet(p)
+    p
+  }
+
+  /** Components of 2–5 nodes, `n` edges, ids offset by `base`. */
+  private def components(n: Int, base: Long): DataFrame =
+    (0 until n).map(i => (base + i / 4 * 5 + i % 4, base + i / 4 * 5 + i % 4 + 1)).toDF("a", "b")
+
+  test("a warm pass of the graph and dedup families recompiles at most a tenth of the cold pass's classes") {
+    val small = save(components(120, 0), "cc_small")
+    val big = save(components(240, 10000), "cc_big")
+    val prEdges = save((0 until 400).map(i => (i % 90L, (i * 7 + 3) % 90L)).toDF("src", "dst"), "pr")
+    val words = Seq("delta", "lake", "spark", "graph", "merge", "table", "query", "plan")
+    val docs = save((0 until 80).map(i => (i.toLong,
+      (0 until 30).map(w => words((i / 2 * 3 + w * (w + 1)) % words.size)).mkString(" "))).toDF("doc_id", "text"),
+      "docs")
+    val out = s"$dir/out"
+    def write(name: String, df: DataFrame): Unit = df.write.mode("overwrite").parquet(s"$out/$name")
+    def pass(): Unit = withConf("graft.cc.driverEdgeCap", "200") {
+      write("cc_driver", Dedup.connectedComponents(spark.read.parquet(small), "a", "b"))
+      write("cc_dist", Dedup.connectedComponents(spark.read.parquet(big), "a", "b"))
+      write("pagerank", PageRank.run(spark.read.parquet(prEdges), 2))
+      write("minhash", Dedup.minHashPairs(spark.read.parquet(docs), "text", "doc_id"))
+      Catalog.primaryKeyCandidates(spark.read.parquet(docs))
+    }
+    val cold = compiles(pass())
+    val warm = compiles(pass())
+    assert(warm * 10 <= cold, s"cold pass compiled $cold classes, warm pass $warm")
+    assert(spark.read.parquet(s"$out/minhash").count() > 0, "the documents hold no near-duplicate pair")
+  }
+
+  /** The aggregate `primaryKeyCandidates` had: one `count_distinct` per
+    * column, which Spark rewrites into an expand. */
+  private def distinctCountKeys(df: DataFrame, cols: Seq[String]): Seq[String] = {
+    val r = df.agg(count(lit(1)), cols.map(c => count_distinct(col(c))): _*).head()
+    cols.indices.filter(j => r.getLong(j + 1) == r.getLong(0)).map(cols)
+  }
+
+  test("primaryKeyCandidates: count_distinct's answers, no more jobs, no compile on a warm call") {
+    val nan = Double.NaN
+    val table = Seq[(java.lang.Long, java.lang.Double, String, java.lang.Double, Int)](
+      (1L, 0.0, "a", 1.5, 1), (2L, -0.0, "b", nan, 1), (3L, nan, null, 2.5, 2),
+      (4L, nan, "c", -0.0, 2), (null, 1.0, "d", 0.0, 3))
+      .toDF("id", "x", "s", "y", "k")
+      .withColumn("pair", struct($"k", $"s"))
+    val cases = Map(
+      "mixed" -> table,
+      "unique" -> table.filter($"id".isNotNull),
+      "empty" -> table.filter(lit(false)),
+      "one row" -> table.limit(1))
+    for ((name, df) <- cases) {
+      val p = save(df, s"pk_${name.replace(' ', '_')}")
+      val loaded = spark.read.parquet(p)
+      assert(Catalog.primaryKeyCandidates(loaded) == distinctCountKeys(loaded, loaded.columns.toSeq), name)
+      assert(Catalog.primaryKeyCandidates(loaded, Seq("s", "id")) == distinctCountKeys(loaded, Seq("s", "id")), name)
+    }
+    // x repeats only as -0.0 = 0.0 and NaN = NaN, as in a grouping; s has a null
+    assert(Catalog.primaryKeyCandidates(spark.read.parquet(s"$dir/pk_unique.parquet")) == Seq("id", "y", "pair"))
+
+    val p = s"$dir/pk_mixed.parquet"
+    val cols = Seq("id", "x", "s", "y", "k", "pair")
+    val refJobs = JobCount(spark.sparkContext)(distinctCountKeys(spark.read.parquet(p), cols))._2
+    val (keys, pkJobs) = JobCount(spark.sparkContext)(Catalog.primaryKeyCandidates(spark.read.parquet(p)))
+    assert(keys == Seq("pair") && pkJobs <= refJobs, s"$pkJobs jobs, count_distinct took $refJobs")
+    for (call <- 1 to 3) {
+      val n = compiles(Catalog.primaryKeyCandidates(spark.read.parquet(p)))
+      assert(n == 0, s"warm call $call compiled $n classes")
+    }
+  }
+}

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.examples.PlanCheck
+import graft.examples.{PlanCheck, PlanDump}
 
 /** The command-line mains refuse arguments that would do nothing or the
   * wrong thing, instead of running zero queries or dying mid-way. */
@@ -38,5 +38,18 @@ class MainArgsSpec extends AnyFunSuite {
     for (name <- Seq("q69_dup_clusters", "q125"))
       assert(PlanCheck.parseArgs(names :+ name).left.exists(_.contains(s"no plan audit for '$name'")), name)
     assert(PlanCheck.Usage.startsWith("usage: PlanCheck"))
+  }
+
+  test("PlanDump takes <outDir> <suffix> [queryName ...] and refuses flags, missing arguments and unknown names") {
+    assert(PlanDump.parseArgs(Seq("/out", "before")) == Right(("/out", "before", Nil)))
+    assert(PlanDump.parseArgs(Seq("/out", "after", "q69_dup_clusters")) == Right(("/out", "after", Seq("q69_dup_clusters"))))
+    for (args <- Seq(Nil, Seq("/out")))
+      assert(PlanDump.parseArgs(args).left.exists(_.contains("expected <outDir> <suffix>")), args)
+    // `--help x` used to create a directory named --help
+    for (args <- Seq(Seq("--help", "x"), Seq("-h"), Seq("/out", "before", "-v")))
+      assert(PlanDump.parseArgs(args).left.exists(_.contains("unknown option")), args)
+    // a prefix of a query name is not a query name
+    assert(PlanDump.parseArgs(Seq("/out", "before", "q69")).left.exists(_.contains("no query named 'q69'")))
+    assert(PlanDump.Usage.startsWith("usage: PlanDump"))
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 /** Counts the Spark jobs a block launches. The block runs under a job
   * group of its own, which Spark hands on to the threads it starts for the
   * block (AQE stage submission, broadcasts), so jobs of other threads are
-  * not counted. The listener bus is asynchronous and its drain is
-  * package-private to Spark, hence this object's package. */
+  * not counted. The listener bus is asynchronous, so it is drained before
+  * and after the block. */
 object JobCount {
   def apply[A](sc: SparkContext)(body: => A): (A, Int) = {
     val group = s"job-count-${java.util.UUID.randomUUID}"
@@ -18,12 +18,12 @@ object JobCount {
         if (Option(e.properties).exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
           started.incrementAndGet()
     }
-    sc.listenerBus.waitUntilEmpty(60000L)
+    ListenerDrain(sc)
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "job count")
     try {
       val out = body
-      sc.listenerBus.waitUntilEmpty(60000L)
+      ListenerDrain(sc)
       (out, started.get)
     } finally {
       sc.clearJobGroup()
