@@ -121,27 +121,11 @@ object Catalog {
 
   /** Primary-key candidates (ref 222-239): columns whose distinct count
     * equals the row count. One distributed aggregate pass over all candidate
-    * columns at once (no per-column scans).
-    *
-    * The distinct counts are the expand-and-group plan Spark's rewrite of
-    * several `count_distinct`s builds, written out in a fixed column order:
-    * every row becomes copy g=0 (all values null, counting the row) and
-    * copy g=j+1 carrying column j alone; grouping by (g, v0..vk) leaves one
-    * row per distinct (column, value), so `count(v_j)` is column j's
-    * non-null distinct count and the g=0 group's size is the row count.
-    * Spark's own rewrite orders its expand by the expression ids of the
-    * freshly loaded relation, so each call generated different code and
-    * compiled it again (4–6 classes per warm call). */
+    * columns at once (no per-column scans), planned by
+    * [[graft.ops.Profile.distinctCounts]] so a warm call compiles no code. */
   def primaryKeyCandidates(df: DataFrame, candidates: Seq[String] = Seq.empty): Seq[String] = {
     val cols = if (candidates.nonEmpty) candidates else df.columns.toSeq
-    val types = df.select(cols.map(col): _*).schema.map(_.dataType)
-    val vs = cols.indices.map(j => s"v$j")
-    val copies = (0 to cols.size).map(g => struct(lit(g).as("g") +: cols.indices.map(j =>
-      (if (g == j + 1) col(cols(j)) else lit(null).cast(types(j))).as(vs(j))): _*))
-    val r = df.select(inline(array(copies: _*)))
-      .groupBy(("g" +: vs).map(col): _*).count()
-      .agg(coalesce(sum(when(col("g") === 0, col("count"))), lit(0L)), vs.map(v => count(col(v))): _*)
-      .head()
+    val r = graft.ops.Profile.distinctCounts(df, cols, ranges = false).head()
     cols.indices.filter(j => r.getLong(j + 1) == r.getLong(0)).map(cols)
   }
 }

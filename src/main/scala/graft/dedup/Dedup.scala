@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import graft.ops.{Lineage, PageRank}
 import graft.text.TextAnalysis
 
 /** Deduplication operators for LLM training corpora.
@@ -589,38 +589,25 @@ object Dedup {
 
   // ---------------- duplicate clustering (connected components) ----------------
 
-  /** Rejects a non-integral id column. A silent cast would turn
-    * un-castable strings into NULLs (dropping their edges) and truncate
-    * doubles (1.2 and 1.7 becoming one node 1): callers with such ids
-    * should hash or dictionary-encode them first and get an error here,
-    * not a quietly wrong clustering. */
-  private def requireIntegral(op: String, df: DataFrame, cols: String*): Unit =
-    cols.foreach { c =>
-      val dt = df.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"$op: id column '$c' must be an integral type, got $dt " +
-          "(hash or dictionary-encode string ids first)")
-    }
-
   /** The answer-sized gate behind [[connectedComponents]] and
     * [[deltaComponents]], and the only reader of `graft.cc.driverEdgeCap`
     * (default 100k rows ≈ 1.6 MB of id pairs, inside the broadcast
     * build-side contract; clamped to [0, Int.MaxValue - 1], the largest
     * limit a probe can take).
     *
-    * `df` is landed once — an eager `localCheckpoint` — and a
+    * `df` is landed once — an eager [[Lineage.cut]] — and a
     * `limit(cap + 1)` probe reads the landed blocks in one task. At or
     * under the cap the probe's rows come back (Left) for the driver; over
     * it the landed frame does (Right), non-empty, and the distributed path
     * continues from it, so `df`'s plan runs once on either side of the
     * cap. With a reliable `checkpointDir` the caller asked for durable
-    * artifacts: `df` lands through `checkpoint()` and is returned
-    * unprobed. The gate is a measured row count, never local mode, so a
-    * corpus-scale input keeps the distributed shape. */
+    * artifacts: the landed frame is returned unprobed. The gate is a
+    * measured row count, never local mode, so a corpus-scale input keeps
+    * the distributed shape. */
   private def collectIfUnder(df: DataFrame,
       checkpointDir: Option[String]): Either[Array[Row], DataFrame] = {
-    if (checkpointDir.isDefined) return Right(df.checkpoint(true))
-    val landed = df.localCheckpoint(true)
+    val landed = Lineage.cut(df, checkpointDir)
+    if (checkpointDir.isDefined) return Right(landed)
     val cap = df.sparkSession.conf.get("graft.cc.driverEdgeCap", "100000").toLong
       .max(0L).min(Int.MaxValue - 1L)
     val probe = landed.coalesce(1).limit(cap.toInt + 1).collect()
@@ -641,22 +628,15 @@ object Dedup {
     * set converges to per-component stars centered on the component minimum
     * in O(log n) rounds regardless of graph diameter (min-label propagation
     * needs O(diameter) rounds — a pathological dup chain kills it).
-    * Lineage is truncated eagerly per round (see `checkpointDir` below);
-    * iterative DataFrame plans otherwise grow without bound. Convergence is
-    * detected by a (count, xor-of-xxhash64) edge-set signature — one tiny
+    * Lineage is cut every round ([[Lineage]]; a `checkpointDir` stays the
+    * session's checkpoint dir); iterative DataFrame plans
+    * otherwise grow without bound. Convergence is detected by a (count,
+    * xor-of-xxhash64) edge-set signature — one tiny
     * aggregate per round against the checkpointed edges; a false positive
     * needs a 64-bit xor collision on top of an identical edge count.
     *
     * Input rows are (aCol, bCol) node pairs; self-pairs are dropped. The
     * id columns must already be integral (byte/short/int/long).
-    *
-    * `checkpointDir`: lineage must be truncated every round or iterative
-    * DataFrame plans grow without bound. By default the truncation is a
-    * `localCheckpoint` — executor-local blocks, correct locally and
-    * cheapest, but on a real cluster they die with their executor and a
-    * 50-round job would restart from nothing. Pass a reliable location
-    * (HDFS/object store) to use `checkpoint()` instead; the dir is set on
-    * the SparkContext if none is configured yet.
     *
     * The canonical edge set passes the answer-sized gate
     * ([[collectIfUnder]]): at or under the cap it is solved on the driver
@@ -669,12 +649,9 @@ object Dedup {
     * cluster_id = the minimum id of the node's component. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    requireIntegral("connectedComponents", pairs, aCol, bCol)
+    PageRank.requireIntegral("connectedComponents", pairs, aCol, bCol)
     val s = pairs.sparkSession
     import s.implicits._
-    checkpointDir.foreach { d =>
-      if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
-    }
     // canonical u < v edges
     val canonical = pairs
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
@@ -724,21 +701,15 @@ object Dedup {
         .distinct()
     }
 
-    // Per-round truncation is LAZY (localCheckpoint(false)): the
-    // convergence-signature aggregate that immediately follows is a
-    // full scan, so ONE job materializes the round's blocks AND reads
-    // the signature — the eager form paid a separate materialization
-    // job per round (pure fixed latency on answer-sized graphs, where
-    // scheduling, not data, is the round cost). The reliable-checkpoint
-    // path stays eager (checkpoint(false) would re-execute the round's
-    // plan twice: reliable checkpoints write out by a re-run, they
-    // don't cache).
-    def truncateLazy(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(false)
+    // The per-round cut is LAZY: the convergence-signature aggregate
+    // that immediately follows is a full scan, so ONE job materializes
+    // the round's blocks AND reads the signature — the eager form paid a
+    // separate materialization job per round (pure fixed latency on
+    // answer-sized graphs, where scheduling, not data, is the round cost).
     var sig: (Long, Long) = null
     var round = 0
     while (round < maxRounds) {
-      val next = truncateLazy(smallStar(largeStar(edges)))
+      val next = Lineage.cutLazy(smallStar(largeStar(edges)), checkpointDir)
       val row = next.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       val nextSig = (row.getLong(0), row.getLong(1))
       edges = next
@@ -780,6 +751,8 @@ object Dedup {
     * and the merge table feeds the relabel scan. Over the cap the
     * distributed fold continues from the gate's landed pairs, so the
     * pair plan is never re-run. All four id columns must be integral.
+    * A `checkpointDir` cuts lineage as in [[connectedComponents]]
+    * ([[Lineage]]; it stays the session's checkpoint dir).
     *
     * Returns (node, old_rep, new_rep), all long, for every node whose
     * label CHANGES: members of standing components that merged, plus
@@ -788,8 +761,8 @@ object Dedup {
     * map; unchanged nodes never ship. */
   def deltaComponents(standingMap: DataFrame, deltaPairs: DataFrame,
       checkpointDir: Option[String] = None): DataFrame = {
-    requireIntegral("deltaComponents", standingMap, "id", "cluster_id")
-    requireIntegral("deltaComponents", deltaPairs, "id_a", "id_b")
+    PageRank.requireIntegral("deltaComponents", standingMap, "id", "cluster_id")
+    PageRank.requireIntegral("deltaComponents", deltaPairs, "id_a", "id_b")
     val session = deltaPairs.sparkSession
     import session.implicits._
     val sm = standingMap.select(col("id"), col("cluster_id"))

@@ -615,10 +615,11 @@ object PlanCheck {
         "no vocabulary-wide sort" -> "Sort [drift",
         "no nested loop beyond the 1-row scalar joins" -> "SortMergeJoin")),
     // profiling: one aggregation pass — the exact multi-count-DISTINCT
-    // rides the standard Expand plan, partial-aggregated; no join, no
-    // window, and the per-column reshape explodes ONE aggregated row
+    // rides the column-order expand (Profile.distinctCounts: copy g=0
+    // first), partial-aggregated; no join, no window, and the per-column
+    // reshape explodes ONE aggregated row
     Want("q160_profile", Seq(
-      "multi-distinct expand" -> "Expand",
+      "multi-distinct expand" -> "inline(array(struct(g, 0,",
       "map-side partials" -> "partial_count"),
       mustNotContain = Seq(
         "no join" -> "Join",

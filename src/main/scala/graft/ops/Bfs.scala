@@ -20,11 +20,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per round one shuffled equi-join (frontier⋈edges on
   * src, edges the big side), one `distinct` on the frontier (node-
-  * sized), one left-anti against visited (node-sized). Lineage is
-  * truncated every round (localCheckpoint / reliable checkpoint — the
-  * PageRank/connectedComponents convention) so deep traversals plan as
-  * many small jobs. The visited set grows monotonically and is bounded
-  * by the node count.
+  * sized), one left-anti against visited (node-sized). Lineage is cut
+  * every round ([[Lineage]]; a `checkpointDir` stays the session's
+  * checkpoint dir) so deep traversals plan as many small jobs.
+  * The visited set grows monotonically and is bounded by the node count.
   */
 object Bfs {
 
@@ -43,12 +42,7 @@ object Bfs {
     val edgeT = edges.schema("src").dataType
     require(seedT == edgeT,
       s"seed node type $seedT must equal the edge key type $edgeT (cast explicitly)")
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    def truncate(df: DataFrame): DataFrame = Lineage.cut(df, checkpointDir)
 
     // materialize the edge list ONCE — every round joins against it, and
     // without truncation each join would re-run the caller's upstream

@@ -28,12 +28,13 @@ import org.apache.spark.sql.functions._
   * Scale shape (the PageRank discipline): the edge table is stored
   * once; per round exactly two shuffles — labels⋈edges equi-join on
   * src, then the (node, label) vote count with map-side combine; the
-  * label table is node-sized; lineage truncates every round
-  * (localCheckpoint / reliable checkpointDir). When the caller knows the
-  * node set is dimension-sized, `broadcastLabels` drops the join exchange
-  * too (see run()); the vote-count shuffle stays map-side combined either
-  * way — the combine is what protects hub nodes from raw-vote skew, so it
-  * is never traded away for one fewer exchange.
+  * label table is node-sized; lineage is cut every round
+  * ([[Lineage]]; a `checkpointDir` stays the session's checkpoint dir).
+  * When the caller knows the node set is dimension-sized,
+  * `broadcastLabels` drops the join exchange too (see run()); the
+  * vote-count shuffle stays map-side combined either way — the combine
+  * is what protects hub nodes from raw-vote skew, so it is never traded
+  * away for one fewer exchange.
   */
 object LabelProp {
 
@@ -55,20 +56,8 @@ object LabelProp {
       checkpointDir: Option[String] = None,
       broadcastLabels: Boolean = false): DataFrame = {
     require(nIters >= 0, "nIters must be non-negative")
-    Seq(srcCol, dstCol).foreach { c =>
-      import org.apache.spark.sql.types._
-      val dt = edges.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"LabelProp: id column '$c' must be an integral type, got $dt " +
-          "(hash or dictionary-encode string ids first — a type mismatch " +
-          "would null the join silently)")
-    }
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    PageRank.requireIntegral("LabelProp", edges, srcCol, dstCol)
+    def truncate(df: DataFrame): DataFrame = Lineage.cut(df, checkpointDir)
 
     val e = truncate(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Distributed PageRank as join-based message passing — the iterative
   * graph-analytics capability class beyond the repo's connected
@@ -30,11 +31,15 @@ import org.apache.spark.sql.functions._
   * exactly two shuffles — the edges⋈ranks equi-join on `src` and the
   * contribution `groupBy(dst)` with map-side partial sums. Edges are
   * the big side and never move more than once per round; ranks are
-  * node-sized. Lineage is truncated every round (`localCheckpoint`, or
-  * reliable `checkpoint` when a dir is given — the connectedComponents
-  * convention at Dedup.scala:546) so a 50-iteration run plans as 50
-  * small jobs, not one exponential tree. Overflow headroom: Σ ranks
-  * stays ≤ n·10⁶, so the damping multiply is < 2⁶³ up to ~10¹² nodes.
+  * node-sized. Lineage is cut every round ([[Lineage]]; a `checkpointDir` stays the
+  * session's checkpoint dir) so a
+  * 50-iteration run plans as 50 small jobs, not one exponential tree.
+  * Overflow headroom: Σ ranks stays ≤ n·10⁶, so the damping multiply is
+  * < 2⁶³ up to ~10¹² nodes.
+  *
+  * The four entry points share one build ([[build]]) and one loop
+  * ([[iterate]]); they differ only in the per-edge contribution, the
+  * spine's teleport and an optional convergence stop.
   */
 object PageRank {
 
@@ -47,40 +52,7 @@ object PageRank {
   def run(edges: DataFrame, nIters: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(nIters >= 0, "nIters must be non-negative")
-    requireSameKeyType(edges)
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-
-    // The edge table is the big thing in this algorithm; it is stored
-    // EXACTLY ONCE. Node ids keep the caller's type (integral ids halve
-    // the shuffle bytes vs strings — encode composite identities
-    // numerically at scale). Build: hash-partition by src FIRST, cache,
-    // then derive outdeg and the degree-annotated edge list WITHOUT
-    // further shuffles (groupBy src and join on src both reuse the
-    // partitioning); checkpointed Datasets keep their outputPartitioning,
-    // so every round's edges⋈ranks join shuffles only the node-sized
-    // ranks side — the edge table never moves again (the q94 write-once
-    // amortization, in-memory form). The scratch copy is unpersisted as
-    // soon as eDeg/nodes materialize, so peak storage is one edge table.
-    val e0 = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val eDeg = truncate(e0.join(deg, "src"))
-    val nodes = truncate(
-      e0.select(col("src").as("node")).unionByName(e0.select(col("dst").as("node")))
-        .distinct())
-    e0.unpersist(false)
-
-    val spine = nodes.withColumn("tele", lit(150000L))
-    var ranks = nodes.withColumn("r", lit(1000000L))
-    for (_ <- 1 to nIters)
-      ranks = truncate(round(eDeg, spine, ranks))
-    ranks.select(col("node"), col("r").as("rank_mu"))
+    iterate(build(edges, weighted = false, None, checkpointDir), nIters, None, checkpointDir)._1
   }
 
   /** WEIGHTED PageRank — rank mass distributes proportionally to edge
@@ -97,45 +69,11 @@ object PageRank {
     * node would divide by zero; negative mass never converges).
     * Overflow headroom: per-term r·w ≤ (1e6·|V|)·max-w must stay ≪ 2⁶³
     * — ~1e4 max-w at a billion nodes, stated. Same 2-shuffle round
-    * shape and lineage truncation as [[run]]. */
+    * shape as [[run]]. */
   def runWeighted(edges: DataFrame, nIters: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(nIters >= 0, "nIters must be non-negative")
-    requireSameKeyType(edges)
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    val e0 = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // bounded check; isNull clause because null <= 0 is null (filtered
-    // out) — a NULL weight must fail as loudly as a non-positive one,
-    // not silently deflate ranks through sum()'s null-dropping
-    val bad = e0.filter(col("w").isNull || col("w") <= 0L).limit(1).collect()
-    require(bad.isEmpty,
-      s"runWeighted: null or non-positive edge weight ${bad.headOption.map(_.get(2))} — " +
-        "weights must be positive integers")
-    val wsum = e0.groupBy("src").agg(sum(col("w")).as("wtot"))
-    val eW = truncate(e0.join(wsum, "src"))
-    val nodes = truncate(
-      e0.select(col("src").as("node")).unionByName(e0.select(col("dst").as("node")))
-        .distinct())
-    e0.unpersist(false)
-    val spine = nodes.withColumn("tele", lit(150000L))
-    var ranks = nodes.withColumn("r", lit(1000000L))
-    for (_ <- 1 to nIters) {
-      val sums = eW.join(ranks, eW("src") === ranks("node"))
-        .select(eW("dst"), expr("(r * w) div wtot").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      ranks = truncate(
-        spine.join(sums, spine("node") === sums("dst"), "left")
-          .select(spine("node"),
-            (spine("tele") + expr("(85 * coalesce(s, 0L)) div 100")).as("r")))
-    }
-    ranks.select(col("node"), col("r").as("rank_mu"))
+    iterate(build(edges, weighted = true, None, checkpointDir), nIters, None, checkpointDir)._1
   }
 
   /** Personalized PageRank — relevance TO a seed set rather than global
@@ -149,42 +87,12 @@ object PageRank {
     *
     * — the same all-integer recurrence as [[run]] with a seed-indicator
     * teleport, so it stays oracle-checkable (q122 unrolls it in SQL).
-    * Same per-round scale shape and lineage truncation. */
+    * Same per-round scale shape. */
   def runPersonalized(edges: DataFrame, seeds: DataFrame, nIters: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(nIters >= 0, "nIters must be non-negative")
-    requireSameKeyType(edges)
-    val seedT = seeds.schema("node").dataType
-    require(seedT == edges.schema("src").dataType,
-      s"seed node type $seedT must equal the edge key type (cast explicitly)")
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    val e0 = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val eDeg = truncate(e0.join(deg, "src"))
-    // seed membership rides the node spine as the per-node teleport —
-    // one broadcast-small join at build time, zero per-round cost
-    val sd = seeds.select(col("node")).distinct()
-      .withColumn("__isSeed", lit(true))
-    val spine = truncate(
-      e0.select(col("src").as("node")).unionByName(e0.select(col("dst").as("node")))
-        .distinct()
-        .join(sd, Seq("node"), "left")
-        .select(col("node"),
-          when(col("__isSeed"), lit(150000L)).otherwise(lit(0L)).as("tele")))
-    e0.unpersist(false)
-
-    var ranks = spine.select(col("node"),
-      when(col("tele") > 0L, lit(1000000L)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to nIters)
-      ranks = truncate(round(eDeg, spine, ranks))
-    ranks.select(col("node"), col("r").as("rank_mu"))
+    iterate(build(edges, weighted = false, Some(seeds), checkpointDir), nIters, None,
+      checkpointDir)._1
   }
 
   /** [[run]] with convergence termination: integer ranks make the
@@ -199,37 +107,8 @@ object PageRank {
   def runToFixpoint(edges: DataFrame, maxIters: Int, tolMu: Long = 0L,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     require(maxIters >= 0 && tolMu >= 0, "maxIters and tolMu must be non-negative")
-    requireSameKeyType(edges)
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    val e0 = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val eDeg = truncate(e0.join(deg, "src"))
-    val nodes = truncate(
-      e0.select(col("src").as("node")).unionByName(e0.select(col("dst").as("node")))
-        .distinct())
-    e0.unpersist(false)
-
-    val spine = nodes.withColumn("tele", lit(150000L))
-    var ranks = nodes.withColumn("r", lit(1000000L))
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
-      it += 1
-      val next = truncate(round(eDeg, spine, ranks))
-      val delta = next.as("n").join(ranks.as("p"), col("n.node") === col("p.node"))
-        .agg(coalesce(sum(abs(col("n.r") - col("p.r"))), lit(0L)).as("d"))
-        .head.getLong(0)
-      ranks = next
-      converged = delta <= tolMu
-    }
-    (ranks.select(col("node"), col("r").as("rank_mu")), it)
+    iterate(build(edges, weighted = false, None, checkpointDir), maxIters, Some(tolMu),
+      checkpointDir)
   }
 
   /** Mismatched src/dst types would make the union'd node spine (and the
@@ -242,15 +121,108 @@ object PageRank {
       "(cast one side explicitly — integral ids halve shuffle width vs strings)")
   }
 
+  /** Rejects a non-integral id column. A silent cast would turn
+    * un-castable strings into NULLs (dropping their edges) and truncate
+    * doubles (1.2 and 1.7 becoming one node 1): callers with such ids
+    * should hash or dictionary-encode them first and get an error here,
+    * not a quietly wrong answer. */
+  private[graft] def requireIntegral(op: String, df: DataFrame, cols: String*): Unit =
+    cols.foreach { c =>
+      val dt = df.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+        s"$op: id column '$c' must be an integral type, got $dt " +
+          "(hash or dictionary-encode string ids first)")
+    }
+
+  /** A built graph: the src-partitioned edge store annotated for
+    * `contrib` (the per-edge contribution expression) and the node
+    * spine (node, tele) carrying each node's teleport. */
+  private final case class Graph(edges: DataFrame, spine: DataFrame, contrib: String)
+
+  /** The edge table is the big thing in this algorithm; it is stored
+    * EXACTLY ONCE. Node ids keep the caller's type (integral ids halve
+    * the shuffle bytes vs strings — encode composite identities
+    * numerically at scale). Build: hash-partition by src FIRST, cache,
+    * then derive the per-source total (`outdeg`, or the weight total
+    * `wtot` when `weighted`) and the annotated edge list WITHOUT further
+    * shuffles (groupBy src and join on src both reuse the partitioning);
+    * checkpointed Datasets keep their outputPartitioning, so every
+    * round's edges⋈ranks join shuffles only the node-sized ranks side —
+    * the edge table never moves again (the q94 write-once amortization,
+    * in-memory form). The scratch copy is unpersisted as soon as the
+    * edge store and spine materialize, so peak storage is one edge
+    * table. The spine teleports 150000 to every node, or — with `seeds`
+    * — to the seeds only, joined in once at build time (zero per-round
+    * cost). */
+  private def build(edges: DataFrame, weighted: Boolean, seeds: Option[DataFrame],
+      checkpointDir: Option[String]): Graph = {
+    requireSameKeyType(edges)
+    seeds.foreach { s =>
+      val seedT = s.schema("node").dataType
+      require(seedT == edges.schema("src").dataType,
+        s"seed node type $seedT must equal the edge key type (cast explicitly)")
+    }
+    val w = if (weighted) Seq(col("w").cast("long").as("w")) else Nil
+    val e0 = edges.select(col("src") +: col("dst") +: w: _*)
+      .repartition(col("src"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (weighted) {
+      // bounded check; isNull clause because null <= 0 is null (filtered
+      // out) — a NULL weight must fail as loudly as a non-positive one,
+      // not silently deflate ranks through sum()'s null-dropping
+      val bad = e0.filter(col("w").isNull || col("w") <= 0L).limit(1).collect()
+      require(bad.isEmpty,
+        s"runWeighted: null or non-positive edge weight ${bad.headOption.map(_.get(2))} — " +
+          "weights must be positive integers")
+    }
+    val total = if (weighted) sum(col("w")).as("wtot") else count(lit(1)).as("outdeg")
+    val store = Lineage.cut(e0.join(e0.groupBy("src").agg(total), "src"), checkpointDir)
+    val nodes = e0.select(col("src").as("node")).unionByName(e0.select(col("dst").as("node")))
+      .distinct()
+    val spine = seeds match {
+      case None => Lineage.cut(nodes, checkpointDir).withColumn("tele", lit(150000L))
+      case Some(s) =>
+        val sd = s.select(col("node")).distinct().withColumn("__isSeed", lit(true))
+        Lineage.cut(nodes.join(sd, Seq("node"), "left")
+          .select(col("node"),
+            when(col("__isSeed"), lit(150000L)).otherwise(lit(0L)).as("tele")), checkpointDir)
+    }
+    e0.unpersist(false)
+    Graph(store, spine, if (weighted) "(r * w) div wtot" else "r div outdeg")
+  }
+
+  /** Up to `maxIters` rounds from r₀ = 1_000_000 on every node the spine
+    * teleports to (0 elsewhere), cutting lineage every round. With
+    * `tolMu` the loop also stops after the first round whose L1 delta
+    * Σ|rₜ₊₁ − rₜ| is ≤ it. Returns (node, rank_mu) and the rounds run. */
+  private def iterate(g: Graph, maxIters: Int, tolMu: Option[Long],
+      checkpointDir: Option[String]): (DataFrame, Int) = {
+    var ranks = g.spine.select(col("node"),
+      when(col("tele") > 0L, lit(1000000L)).otherwise(lit(0L)).as("r"))
+    var it = 0
+    var converged = false
+    while (it < maxIters && !converged) {
+      it += 1
+      val next = Lineage.cut(round(g.edges, g.spine, ranks, g.contrib), checkpointDir)
+      tolMu.foreach { tol =>
+        val delta = next.as("n").join(ranks.as("p"), col("n.node") === col("p.node"))
+          .agg(coalesce(sum(abs(col("n.r") - col("p.r"))), lit(0L)).as("d"))
+          .head.getLong(0)
+        converged = delta <= tol
+      }
+      ranks = next
+    }
+    (ranks.select(col("node"), col("r").as("rank_mu")), it)
+  }
+
   /** One power-iteration round as a declarative plan: the edges⋈ranks
-    * equi-join on src, the map-side-combined contribution sum on dst,
-    * and the node-spine left join applying the spine's per-node
-    * teleport (`tele` column — constant 150000 for [[run]], the seed
-    * indicator for [[runPersonalized]]) + damping. */
-  private[graft] def round(eDeg: DataFrame, nodes: DataFrame,
-      ranks: DataFrame): DataFrame = {
-    val sums = eDeg.join(ranks, eDeg("src") === ranks("node"))
-      .select(eDeg("dst"), expr("r div outdeg").as("c"))
+    * equi-join on src, the map-side-combined sum of each edge's
+    * `contrib` on dst, and the node-spine left join applying the spine's
+    * per-node teleport (`tele` column) + damping. */
+  private[graft] def round(edges: DataFrame, nodes: DataFrame, ranks: DataFrame,
+      contrib: String = "r div outdeg"): DataFrame = {
+    val sums = edges.join(ranks, edges("src") === ranks("node"))
+      .select(edges("dst"), expr(contrib).as("c"))
       .groupBy("dst").agg(sum("c").as("s"))
     nodes.join(sums, nodes("node") === sums("dst"), "left")
       .select(nodes("node"),

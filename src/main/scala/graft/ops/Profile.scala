@@ -16,30 +16,24 @@ import org.apache.spark.sql.types._
   * timestamps as formatted strings (§5 timestamp protocol). Type
   * routing is schema-driven, so the operator profiles any table.
   *
-  * Scale shape: ONE aggregation pass — count/min/max are plain partial
-  * aggregates; the exact per-column distinct counts ride Spark's
-  * multi-count-DISTINCT expand (k+1 aggregation groups through one
-  * map-side-combined shuffle — the standard exact plan; swap in the
-  * q128 HLL registers per column when 100 TB exactness isn't worth the
-  * expand multiplier, stated honestly). The per-column reshape explodes
-  * a literal struct array over the ONE aggregated row — answer-sized.
+  * Scale shape: ONE aggregation pass — the exact per-column distinct
+  * counts ride a multi-count-DISTINCT expand ([[distinctCounts]]: k+1
+  * aggregation groups through one map-side-combined shuffle — the
+  * standard exact plan; swap in the q128 HLL registers per column when
+  * 100 TB exactness isn't worth the expand multiplier, stated honestly),
+  * and count/min/max ride its row-count copy. The per-column reshape
+  * explodes a literal struct array over the ONE aggregated row —
+  * answer-sized.
   */
 object Profile {
 
   def profile(df: DataFrame): DataFrame = {
     val fields = df.schema.fields.toSeq
-    def aggsFor(f: StructField): Seq[Column] = {
-      val c = col(f.name)
-      Seq(count(c).as(s"cnt_${f.name}"),
-        countDistinct(c).as(s"nd_${f.name}"),
-        min(c).as(s"mn_${f.name}"),
-        max(c).as(s"mx_${f.name}"))
-    }
-    val aggd = df.agg(count(lit(1)).as("nr"), fields.flatMap(aggsFor): _*)
+    val aggd = distinctCounts(df, fields.map(_.name), ranges = true)
 
-    def entry(f: StructField): Column = {
-      val mn = col(s"mn_${f.name}")
-      val mx = col(s"mx_${f.name}")
+    def entry(f: StructField, j: Int): Column = {
+      val mn = col(s"mn$j")
+      val mx = col(s"mx$j")
       val (minNum, maxNum, minStr, maxStr) = f.dataType match {
         case ByteType | ShortType | IntegerType | LongType
            | DoubleType | FloatType | _: DecimalType =>
@@ -54,14 +48,50 @@ object Profile {
             mn.cast("string"), mx.cast("string"))
       }
       struct(lit(f.name).as("col_name"),
-        col("nr").as("n_rows"),
-        (col("nr") - col(s"cnt_${f.name}")).as("n_nulls"),
-        col(s"nd_${f.name}").as("n_distinct"),
+        col("n").as("n_rows"),
+        (col("n") - col(s"c$j")).as("n_nulls"),
+        col(s"d$j").as("n_distinct"),
         minNum.as("min_num"), maxNum.as("max_num"),
         minStr.as("min_str"), maxStr.as("max_str"))
     }
-    aggd.select(explode(array(fields.map(entry): _*)).as("e"))
+    aggd.select(explode(array(fields.zipWithIndex.map((entry _).tupled): _*)).as("e"))
       .select(col("e.*"))
+  }
+
+  /** Exact distinct counts of `cols` in one aggregate, as the
+    * expand-and-group plan Spark's rewrite of several `count_distinct`s
+    * builds, written out in a fixed column order: every row becomes copy
+    * g=0 (all v null, counting the row) and copy g=j+1 carrying column j
+    * alone as v_j; grouping by (g, v0..vk) leaves one row per distinct
+    * (column, value) plus the one g=0 group, so count(v_j) is column j's
+    * non-null distinct count and the g=0 group's size is the row count.
+    * Spark's own rewrite orders its expand by the expression ids of the
+    * freshly loaded relation, so each call generated different code and
+    * compiled it again.
+    *
+    * Returns one row: `n`, the row count, and per column j `d$j`, its
+    * distinct count. With `ranges` the g=0 copy also carries the row's
+    * raw values as payload p_j — as Spark's rewrite carries its regular
+    * aggregates' inputs — and the row adds `c$j` (non-null count),
+    * `mn$j` and `mx$j` (min and max), aggregated in the g=0 group. */
+  private[graft] def distinctCounts(df: DataFrame, cols: Seq[String],
+      ranges: Boolean): DataFrame = {
+    val types = df.select(cols.map(col): _*).schema.map(_.dataType)
+    val js = cols.indices
+    def only(keep: Boolean, j: Int): Column = if (keep) col(cols(j)) else lit(null).cast(types(j))
+    val copies = (0 to cols.size).map { g =>
+      val payload = if (ranges) js.map(j => only(g == 0, j).as(s"p$j")) else Nil
+      struct(lit(g).as("g") +: js.map(j => only(g == j + 1, j).as(s"v$j")) ++: payload: _*)
+    }
+    val ps = if (ranges) js.flatMap(j => Seq(count(col(s"p$j")).as(s"c$j"),
+      min(col(s"p$j")).as(s"mn$j"), max(col(s"p$j")).as(s"mx$j"))) else Nil
+    val rs = if (ranges) js.flatMap(j => Seq(coalesce(sum(col(s"c$j")), lit(0L)).as(s"c$j"),
+      min(col(s"mn$j")).as(s"mn$j"), max(col(s"mx$j")).as(s"mx$j"))) else Nil
+    df.select(inline(array(copies: _*)))
+      .groupBy(("g" +: js.map(j => s"v$j")).map(col): _*)
+      .agg(count(lit(1)).as("count"), ps: _*)
+      .agg(coalesce(sum(when(col("g") === 0, col("count"))), lit(0L)).as("n"),
+        js.map(j => count(col(s"v$j")).as(s"d$j")) ++ rs: _*)
   }
 
   /** Schema/statistics drift between two snapshots of the "same" table

@@ -43,7 +43,8 @@ object Scc {
   def scc(edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 12, maxPropSteps: Int = 40): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    propSteps = 0L
+    PageRank.requireIntegral("scc", edges, srcCol, dstCol)
+    var propSteps = 0L
     var e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
@@ -66,7 +67,8 @@ object Scc {
       // giant component resolves are tendril-sized, and 32-partition
       // shuffles of a dozen rows are pure scheduling overhead
       val one = nNodes < 100000
-      val fb = propagateFB(nodes, e, maxPropSteps, one)
+      val (fb, steps) = propagateFB(nodes, e, maxPropSteps, one)
+      propSteps += steps
       val res0 = fb.filter(col("mf") === col("mb"))
         .select(col("node"), col("mf").as("scc"))
       val res = (if (one) res0.coalesce(1) else res0).localCheckpoint()
@@ -81,8 +83,6 @@ object Scc {
         .join(broadcast(nodes.withColumnRenamed("node", "dst")), Seq("dst"), "left_semi")
       nNodes = nodes.count()
       e = (if (nNodes < 100000) e0.coalesce(1) else e0).localCheckpoint()
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[scc] round $round done, remaining nodes=$nNodes")
     }
     require(nNodes == 0,
       s"scc: $nNodes nodes unresolved after $maxRounds peel rounds — the " +
@@ -91,10 +91,6 @@ object Scc {
     QueryLog.note("scc.propSteps", propSteps)
     resolved
   }
-
-  /** Total inner propagation steps across the run (diagnostics — lands
-    * in the query log next to scc.roundsRun). */
-  private var propSteps = 0L
 
   /** SIMULTANEOUS forward/backward min-label propagation to fixpoint:
     * (node, mf, mb) with mf = min id that reaches the node along `e`
@@ -106,9 +102,10 @@ object Scc {
     * checkpoint is LAZY, and the change-count action is the single job
     * that materializes it — one job per step for both directions.
     * Convergence = zero changed labels, read from the previous labels
-    * carried THROUGH the aggregate (no compare join). */
+    * carried THROUGH the aggregate (no compare join). Returns the labels
+    * and the steps taken. */
   private def propagateFB(nodes: DataFrame, e: DataFrame,
-      maxPropSteps: Int, one: Boolean): DataFrame = {
+      maxPropSteps: Int, one: Boolean): (DataFrame, Int) = {
     val nulL = lit(null).cast("long")
     var lab = nodes.select(col("node"), col("node").as("mf"),
       col("node").as("mb")).localCheckpoint()
@@ -116,7 +113,6 @@ object Scc {
     var steps = 0
     while (changed > 0) {
       steps += 1
-      propSteps += 1
       require(steps <= maxPropSteps,
         s"scc: min-label propagation did not converge in $maxPropSteps " +
           "steps — diameter exceeds the bound; raise maxPropSteps")
@@ -142,6 +138,6 @@ object Scc {
         .count()
       lab = nxt.select(col("node"), col("mf"), col("mb"))
     }
-    lab
+    (lab, steps)
   }
 }

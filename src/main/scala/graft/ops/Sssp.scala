@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: per round one shuffled equi-join (labels⋈edges on src —
   * the edge table is hash-partitioned by src ONCE and never moves
   * again) and one map-side-combined min per dst; labels are node-sized.
-  * Lineage truncates every round (localCheckpoint / reliable
-  * checkpointDir — the PageRank convention). The fixpoint delta test is
+  * Lineage is cut every round ([[Lineage]]; a `checkpointDir` stays the
+  * session's checkpoint dir). The fixpoint delta test is
   * an exact integer anti-join count (changed labels), node-sized and
   * cheap next to the round — the `runToFixpoint` discipline PageRank
   * established, answer-invariant at tol 0 by construction.
@@ -43,33 +43,7 @@ object Sssp {
   def runRounds(edges: DataFrame, source: Long, rounds: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 0, "rounds must be non-negative")
-    PageRank.requireSameKeyType(edges)
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    val e = truncate(edges
-      .select(col("src"), col("dst"),
-        // fail loudly on a negative weight (would loop forever in
-        // runToFixpoint / return a non-shortest label) AND on NULL —
-        // min() ignores nulls, so a NULL-weight edge would silently
-        // relax nothing, as if the edge did not exist (the PageRank
-        // r12 null-rejection discipline)
-        when(col("w").isNull || col("w") < 0,
-          raise_error(concat(lit("Sssp: negative or NULL edge weight "),
-            coalesce(col("w").cast("string"), lit("NULL")))))
-          .otherwise(col("w").cast("long")).as("w"))
-      .repartition(col("src")))
-    // the source label keeps the edge key type — a long literal against
-    // int keys would ride implicit coercion through every round's join
-    var dist = truncate(e.sparkSession.range(1)
-      .select(lit(source).cast(edges.schema("src").dataType).as("node"),
-        lit(0L).as("dist")))
-    for (_ <- 1 to rounds)
-      dist = truncate(relaxOnce(dist, e))
-    dist.orderBy(col("node"))
+    relax(edges, source, rounds, toFixpoint = false, checkpointDir)._1
   }
 
   /** One relaxation round: dist' = min(dist, min over incoming edges of
@@ -87,32 +61,41 @@ object Sssp {
   def runToFixpoint(edges: DataFrame, source: Long, maxRounds: Int,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
+    relax(edges, source, maxRounds, toFixpoint = true, checkpointDir)
+  }
+
+  /** Up to `maxRounds` relaxation rounds from `source`, cutting lineage
+    * every round; with `toFixpoint` the loop also stops after the first
+    * round that changes no label. Returns (labels, roundsRun). */
+  private def relax(edges: DataFrame, source: Long, maxRounds: Int, toFixpoint: Boolean,
+      checkpointDir: Option[String]): (DataFrame, Int) = {
     PageRank.requireSameKeyType(edges)
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    val e = truncate(edges
+    val e = Lineage.cut(edges
       .select(col("src"), col("dst"),
+        // fail loudly on a negative weight (would loop forever in
+        // runToFixpoint / return a non-shortest label) AND on NULL —
+        // min() ignores nulls, so a NULL-weight edge would silently
+        // relax nothing, as if the edge did not exist (the PageRank
+        // r12 null-rejection discipline)
         when(col("w").isNull || col("w") < 0,
           raise_error(concat(lit("Sssp: negative or NULL edge weight "),
             coalesce(col("w").cast("string"), lit("NULL")))))
           .otherwise(col("w").cast("long")).as("w"))
-      .repartition(col("src")))
-    var dist = truncate(e.sparkSession.range(1)
+      .repartition(col("src")), checkpointDir)
+    // the source label keeps the edge key type — a long literal against
+    // int keys would ride implicit coercion through every round's join
+    var dist = Lineage.cut(e.sparkSession.range(1)
       .select(lit(source).cast(edges.schema("src").dataType).as("node"),
-        lit(0L).as("dist")))
+        lit(0L).as("dist")), checkpointDir)
     var r = 0
     var changed = true
     while (changed && r < maxRounds) {
-      val next = truncate(relaxOnce(dist, e))
+      val next = Lineage.cut(relaxOnce(dist, e), checkpointDir)
       // changed iff some (node, dist) in next is absent from dist —
       // labels only ever appear or decrease, so set difference is the
       // whole delta; node-sized anti-join, exact integer equality
-      changed = next.join(dist, Seq("node", "dist"), "left_anti")
-        .limit(1).count() > 0
+      if (toFixpoint)
+        changed = next.join(dist, Seq("node", "dist"), "left_anti").limit(1).count() > 0
       dist = next
       r += 1
     }

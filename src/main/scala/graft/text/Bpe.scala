@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * a per-row merge map. Without the delta maintenance, a 10⁷-word
   * vocabulary × 32k merges would re-aggregate ALL pairs 32k times; with
   * it, round cost tracks pair rarity. Both iterating tables cache per
-  * round with periodic lineage truncation (the connectedComponents
-  * discipline; reliable `checkpointDir` option for cluster runs).
+  * round with a lineage cut every 10th round ([[graft.ops.Lineage]]; a
+  * `checkpointDir` stays the session's checkpoint dir).
   *
   * Determinism: ties on pair count break lexicographically, so the
   * learned merge list is a pure function of the corpus on any engine —
@@ -57,7 +57,6 @@ object Bpe {
       onRound: Option[RoundStats => Unit] = None): Seq[Merge] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     // corpus -> (word, count): the ONE corpus-sized pass
     val words = docs
       .select(explode(split(TextAnalysis.normalize(col(textCol)), " ", -1)).as("w"))
@@ -87,8 +86,7 @@ object Bpe {
     // checkpoint files / RDD blocks, not in that cache entry)
     def rotate[T](mapped: Dataset[T], doCheckpoint: Boolean): Dataset[T] =
       if (doCheckpoint) {
-        val cp = if (checkpointDir.isDefined) mapped.checkpoint()
-          else mapped.localCheckpoint()
+        val cp = graft.ops.Lineage.cut(mapped, checkpointDir)
         mapped.unpersist()
         cp
       } else { mapped.count(); mapped }

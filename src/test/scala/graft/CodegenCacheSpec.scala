@@ -4,12 +4,13 @@ import java.nio.file.Files
 
 import org.apache.spark.JobCount
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{NumericType, StructField}
 
 import graft.catalog.Catalog
 import graft.dedup.Dedup
-import graft.ops.PageRank
+import graft.ops.{PageRank, Profile}
 
 /** Generated code compiles once per JVM: the session's class cache holds
   * the iterative families' working set, so a repeated pass over freshly
@@ -67,6 +68,34 @@ class CodegenCacheSpec extends SparkSpec {
     cols.indices.filter(j => r.getLong(j + 1) == r.getLong(0)).map(cols)
   }
 
+  /** The plan `Profile.profile` had: count, count_distinct, min and max
+    * of every column in one aggregate, reshaped to one row per column. */
+  private def profileRef(df: DataFrame): DataFrame = {
+    val fields = df.schema.fields.toSeq
+    val aggd = df.agg(count(lit(1)).as("nr"), fields.flatMap { f =>
+      val c = col(f.name)
+      Seq(count(c).as(s"cnt_${f.name}"), count_distinct(c).as(s"nd_${f.name}"),
+        min(c).as(s"mn_${f.name}"), max(c).as(s"mx_${f.name}"))
+    }: _*)
+    def entry(f: StructField): Column = {
+      val (mn, mx) = (col(s"mn_${f.name}"), col(s"mx_${f.name}"))
+      val num = f.dataType.isInstanceOf[NumericType]
+      struct(lit(f.name).as("col_name"), col("nr").as("n_rows"),
+        (col("nr") - col(s"cnt_${f.name}")).as("n_nulls"), col(s"nd_${f.name}").as("n_distinct"),
+        (if (num) mn.cast("double") else lit(null).cast("double")).as("min_num"),
+        (if (num) mx.cast("double") else lit(null).cast("double")).as("max_num"),
+        (if (num) lit(null).cast("string") else mn.cast("string")).as("min_str"),
+        (if (num) lit(null).cast("string") else mx.cast("string")).as("max_str"))
+    }
+    aggd.select(explode(array(fields.map(entry): _*)).as("e")).select(col("e.*"))
+  }
+
+  /** Rows as values, doubles as text (NaN equals itself) with -0.0 read
+    * as 0.0: min and max may return either zero, by the order partial
+    * aggregates meet. */
+  private def values(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map { case d: Double => (d + 0.0).toString; case v => v })
+
   test("primaryKeyCandidates: count_distinct's answers, no more jobs, no compile on a warm call") {
     val nan = Double.NaN
     val table = Seq[(java.lang.Long, java.lang.Double, String, java.lang.Double, Int)](
@@ -82,6 +111,7 @@ class CodegenCacheSpec extends SparkSpec {
     for ((name, df) <- cases) {
       val p = save(df, s"pk_${name.replace(' ', '_')}")
       val loaded = spark.read.parquet(p)
+      assert(values(Profile.profile(loaded)) == values(profileRef(loaded)), name)
       assert(Catalog.primaryKeyCandidates(loaded) == distinctCountKeys(loaded, loaded.columns.toSeq), name)
       assert(Catalog.primaryKeyCandidates(loaded, Seq("s", "id")) == distinctCountKeys(loaded, Seq("s", "id")), name)
     }
@@ -93,9 +123,12 @@ class CodegenCacheSpec extends SparkSpec {
     val refJobs = JobCount(spark.sparkContext)(distinctCountKeys(spark.read.parquet(p), cols))._2
     val (keys, pkJobs) = JobCount(spark.sparkContext)(Catalog.primaryKeyCandidates(spark.read.parquet(p)))
     assert(keys == Seq("pair") && pkJobs <= refJobs, s"$pkJobs jobs, count_distinct took $refJobs")
+    Profile.profile(spark.read.parquet(p)).collect()
     for (call <- 1 to 3) {
       val n = compiles(Catalog.primaryKeyCandidates(spark.read.parquet(p)))
       assert(n == 0, s"warm call $call compiled $n classes")
+      val m = compiles(Profile.profile(spark.read.parquet(p)).collect())
+      assert(m == 0, s"warm Profile.profile call $call compiled $m classes")
     }
   }
 }

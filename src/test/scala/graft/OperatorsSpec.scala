@@ -1377,6 +1377,15 @@ class OperatorsSpec extends SparkSpec {
     // self-loops are ignored: a pure self-loop graph has no edges left
     val loops = Seq((5L, 5L)).toDF("src", "dst")
     assert(graft.ops.Scc.scc(loops, "src", "dst").count() == 0)
+    // ids must be integral: a cast would make 1.2 and 1.7 one node 1, and
+    // turn uncastable strings into NULLs whose edges vanish
+    val nonIntegral = Seq(
+      "double ids" -> Seq((1.2, 1.7), (1.7, 1.2)).toDF("src", "dst"),
+      "string ids" -> Seq(("a", "b"), ("b", "a")).toDF("src", "dst"))
+    for ((what, bad) <- nonIntegral) {
+      val ex = intercept[IllegalArgumentException](graft.ops.Scc.scc(bad, "src", "dst"))
+      assert(ex.getMessage.contains("integral"), what)
+    }
   }
 
   test("RandomWalk: choices replay the md5 recipe; dangling nodes stop with NULLs") {

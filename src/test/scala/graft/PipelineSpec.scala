@@ -740,9 +740,13 @@ class PipelineSpec extends SparkSpec {
     val wordCounts = corpus.groupBy(identity).map { case (w, g) => w -> g.length.toLong }
     val expected = refTrain(wordCounts, 12)
     val stats = scala.collection.mutable.ArrayBuffer[Bpe.RoundStats]()
-    val learned = Bpe.train(docs, "text", nMerges = 12, onRound = Some(stats += _))
+    // a reliable checkpoint dir: the 10th round cuts its lineage there
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_bpe_ckpt")
+    val learned = Bpe.train(docs, "text", nMerges = 12, checkpointDir = Some(ckpt.toString),
+      onRound = Some(stats += _))
     assert(learned.map(m => (m.left, m.right)) == expected,
       s"learned=$learned expected=$expected")
+    assert(java.nio.file.Files.list(ckpt).count() > 0, "no checkpoint files under the dir")
     // the incremental claim: every merge round's delta recount reads only
     // the words CONTAINING the merged pair — a strict subset of the
     // vocabulary on this corpus (4 distinct words, no pair in all 4)
