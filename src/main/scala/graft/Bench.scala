@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{functions, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.{functions, Observation}
+
+import graft.ops.QueryProfile
 
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line {"metric":...,"queries":{name:sec}}. Per-query
@@ -100,38 +100,31 @@ object Bench {
     // just spread over more wall — so every query also reports the
     // process-CPU delta (all 32 executor threads + driver, in seconds).
     // Compare queries_cpu across rounds; treat wall as weather.
-    val osBean = java.lang.management.ManagementFactory
-      .getPlatformMXBean(classOf[com.sun.management.OperatingSystemMXBean])
-
-    // Janino compilations per query: (first run's count, later runs'
-    // count, compile ms over all runs). A later run that compiles again
-    // means a generated-class cache smaller than the working set, or a
-    // plan whose generated code differs from call to call.
-    val codegen = scala.collection.mutable.Map[String, (Long, Long, Double)]()
+    //
+    // Every run is one QueryProfile (wall, process CPU, Janino compiles,
+    // jobs/stages/tasks, executor time, shuffle, spill, driver gap), kept
+    // per query in run order. A later run that compiles again means a
+    // generated-class cache smaller than the working set, or a plan whose
+    // generated code differs from call to call.
+    val profiles = scala.collection.mutable.Map[String, Vector[QueryProfile.Profile]]()
     val REPEAT_FLOOR = 0.5
     def once(d: QueryDef): (Double, Double, Long) = {
-      val k0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val ns0 = CodeGenerator.compileTime
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
       // the noop sink consumes every output column, so no work the query's
       // answer needs is pruned away (a count() reads no column); the row
       // count rides along as an observed metric
-      val n = try {
-        val rows = Observation()
-        d.run(spark, sfDir).observe(rows, functions.count(functions.lit(1)).as("n"))
-          .write.format("noop").mode("overwrite").save()
-        rows.get("n").asInstanceOf[Long]
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] ${d.name} FAILED: ${e.getMessage}"); -1L
+      val (n, p) = QueryProfile.of(spark) {
+        try {
+          val rows = Observation()
+          d.run(spark, sfDir).observe(rows, functions.count(functions.lit(1)).as("n"))
+            .write.format("noop").mode("overwrite").save()
+          rows.get("n").asInstanceOf[Long]
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] ${d.name} FAILED: ${e.getMessage}"); -1L
+        }
       }
-      val out = ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9, n)
-      val k = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - k0
-      val ms = (CodeGenerator.compileTime - ns0) / 1e6
-      codegen(d.name) = codegen.get(d.name)
-        .fold((k, 0L, ms)) { case (first, later, m) => (first, later + k, m + ms) }
-      out
+      profiles(d.name) = profiles.getOrElse(d.name, Vector.empty) :+ p
+      (p.wallMs / 1e3, p.cpuMs / 1e3, n)
     }
     val firstPass = defs.map { d =>
       // Measurement hygiene (r16, guide §1): by the 190th query the 8 GB
@@ -322,9 +315,13 @@ object Bench {
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { path =>
       def obj(f: ((String, Double, Double, Double)) => Double): String =
         results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
-      def codegenObj(f: ((Long, Long, Double)) => String): String =
-        results.map(r => "\"" + r._1 + "\":" + f(codegen(r._1))).mkString("{", ",", "}")
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(_._2)},"queries_min":${obj(_._3)},"queries_cpu":${obj(_._4)},"queries_compiles":${codegenObj(c => s"[${c._1},${c._2}]")},"queries_compile_ms":${codegenObj(c => r2(c._3).toString)},"total_cpu":$totalCpu,"repeats":3,"sf":"$sfDir","stalled":${stalled.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+      def profileObj(f: Vector[QueryProfile.Profile] => String): String =
+        results.map(r => "\"" + r._1 + "\":" + f(profiles(r._1))).mkString("{", ",", "}")
+      val compiles = profileObj(ps => s"[${ps.head.compiles},${ps.tail.map(_.compiles).sum}]")
+      val compileMs = profileObj(ps => r2(ps.map(_.compileMs).sum).toString)
+      // the profile of each query's min-wall run, the run queries_min reports
+      val minProfile = profileObj(_.minBy(_.wallMs).toJson)
+      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(_._2)},"queries_min":${obj(_._3)},"queries_cpu":${obj(_._4)},"queries_compiles":$compiles,"queries_compile_ms":$compileMs,"queries_profile":$minProfile,"total_cpu":$totalCpu,"repeats":3,"sf":"$sfDir","stalled":${stalled.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }

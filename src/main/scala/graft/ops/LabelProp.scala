@@ -51,7 +51,8 @@ object LabelProp {
     * because at a billion-node graph the label table is itself corpus-
     * sized and must never broadcast (the q189 dropped-set rule: state the
     * bet's validity bound, keep the general path safe). Measured at sf0.1
-    * (LpaProfile, quiet 2nd repeat): 17.7 → 11.9 cpu-s for 3 rounds. */
+    * (`examples/LpaProfile`, in the tree up to commit `778c0aa`; quiet 2nd
+    * repeat): 17.7 → 11.9 cpu-s for 3 rounds. */
   def run(edges: DataFrame, srcCol: String, dstCol: String, nIters: Int,
       checkpointDir: Option[String] = None,
       broadcastLabels: Boolean = false): DataFrame = {

@@ -9,15 +9,13 @@ import javax.xml.stream.util.StreamReaderDelegate
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.w3c.dom.Element
 
 /** Native xlsx (Office Open XML) workbook reader — no external
   * dependencies: an .xlsx file is a zip of XML parts, and the JDK ships
-  * the zip codec and both XML parsers used here. The two large parts,
-  * `sharedStrings.xml` and the sheet, are read in one streaming StAX pass
-  * each (no document tree; cells are built as their end tags arrive); the
-  * tiny `workbook.xml` and its rels part are read as DOM. Both parsers
-  * refuse DTDs and never resolve an external entity. Mirrors the reference's openpyxl
+  * the zip codec and the XML parser used here. Every part (`workbook.xml`,
+  * its rels part, `sharedStrings.xml` and the sheet) is read in one
+  * streaming StAX pass (no document tree; cells are built as their end tags
+  * arrive) that refuses DTDs and never resolves an external entity. Mirrors the reference's openpyxl
   * usage (SQL_DATA_INTEGRATION_TOOL.py:555-577: open workbook, list sheet
   * names, read a chosen sheet into rows, first row = headers).
   *
@@ -36,10 +34,7 @@ import org.w3c.dom.Element
 object Xlsx {
 
   /** Sheet names, in workbook order. */
-  def listSheets(path: String): Seq[String] = withZip(path) { zip =>
-    val wb = parse(zip, "xl/workbook.xml")
-    elements(wb, "sheet").map(_.getAttribute("name"))
-  }
+  def listSheets(path: String): Seq[String] = withZip(path)(sheets(_).map(_._1))
 
   /** One sheet as a DataFrame of strings; first row = column names (the
     * reference's header convention). Cast/rename downstream via
@@ -60,17 +55,13 @@ object Xlsx {
 
   /** Raw cell grid of one sheet (dense, row-major, nulls for gaps). */
   def readRows(path: String, sheet: String): Seq[Array[String]] = withZip(path) { zip =>
-    val wb = parse(zip, "xl/workbook.xml")
-    val sheets = elements(wb, "sheet")
-    val target = sheets.find(_.getAttribute("name") == sheet)
+    val all = sheets(zip)
+    val rid = all.find(_._1 == sheet).map(_._2)
       .getOrElse(throw new IllegalArgumentException(
-        s"no sheet '$sheet' in $path (have: ${sheets.map(_.getAttribute("name")).mkString(", ")})"))
-    val rid = Option(target.getAttribute("r:id")).filter(_.nonEmpty)
-      .getOrElse(target.getAttribute("id")) // some writers emit unprefixed
-    val rels = parse(zip, "xl/_rels/workbook.xml.rels")
-    val part = elements(rels, "Relationship")
-      .find(_.getAttribute("Id") == rid)
-      .map(_.getAttribute("Target"))
+        s"no sheet '$sheet' in $path (have: ${all.map(_._1).mkString(", ")})"))
+    val part = elementAttributes(zip, "xl/_rels/workbook.xml.rels", "Relationship", "Id", "Target")
+      .find(_.head == rid)
+      .map(_(1))
       .getOrElse(throw new IllegalStateException(s"unresolved sheet relationship $rid"))
     val sheetPath = if (part.startsWith("/")) part.drop(1) else "xl/" + part
     val shared: IndexedSeq[String] =
@@ -78,6 +69,22 @@ object Xlsx {
       else sharedStrings(zip)
     sheetRows(zip, sheetPath, shared)
   }
+
+  /** The workbook's sheets in order, as (name, relationship id); some
+    * writers emit the id unprefixed. */
+  private def sheets(zip: ZipFile): Seq[(String, String)] =
+    elementAttributes(zip, "xl/workbook.xml", "sheet", "name", "r:id", "id")
+      .map { case Seq(name, rid, id) => (name, if (rid.nonEmpty) rid else id) }
+
+  /** The `names` attributes of every `tag` element of a part, in document
+    * order. */
+  private def elementAttributes(zip: ZipFile, entry: String, tag: String, names: String*): Seq[Seq[String]] =
+    stream(zip, entry) { r =>
+      val out = mutable.ArrayBuffer.empty[Seq[String]]
+      while (r.hasNext)
+        if (r.next() == START_ELEMENT && named(r, tag)) out += names.map(attribute(r, _))
+      out.toSeq
+    }
 
   /** The `<si>` texts in order, each the concatenation of every text node
     * under it — rich-text runs, phonetic runs and whitespace alike, as
@@ -158,20 +165,9 @@ object Xlsx {
     zip.getInputStream(e)
   }
 
-  private def parse(zip: ZipFile, entry: String): Element = {
-    val in = openPart(zip, entry)
-    try {
-      val fac = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      fac.setNamespaceAware(false)
-      // workbooks come from outside: no DTDs, no external entities
-      fac.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-      fac.newDocumentBuilder().parse(in).getDocumentElement
-    } finally in.close()
-  }
-
-  /** One streaming pass over a part. Namespace-unaware like the DOM path
-    * (names are matched prefix-tolerantly); a DOCTYPE fails the read at
-    * once, and the resolver refuses every external entity, so workbook
+  /** One streaming pass over a part. Namespace-unaware (element names are
+    * matched prefix-tolerantly, attributes by qualified name); a DOCTYPE
+    * fails the read at once, and the resolver refuses every external entity, so workbook
     * content can never make the reader open another resource. */
   private def stream[A](zip: ZipFile, entry: String)(f: XMLStreamReader => A): A = {
     val in = openPart(zip, entry)
@@ -202,13 +198,14 @@ object Xlsx {
     n == tag || n.endsWith(":" + tag)
   }
 
-  /** Value of the unprefixed attribute `name`, "" when absent (DOM's
-    * `getAttribute` contract). */
+  /** Value of the attribute whose qualified name is `name` (`r:id` names
+    * the prefixed one), "" when absent. */
   private def attribute(r: XMLStreamReader, name: String): String = {
     var i = 0
     while (i < r.getAttributeCount) {
-      if (r.getAttributeLocalName(i) == name && Option(r.getAttributePrefix(i)).forall(_.isEmpty))
-        return r.getAttributeValue(i)
+      val prefix = Option(r.getAttributePrefix(i)).getOrElse("")
+      val local = r.getAttributeLocalName(i)
+      if ((if (prefix.isEmpty) local else s"$prefix:$local") == name) return r.getAttributeValue(i)
       i += 1
     }
     ""
@@ -216,24 +213,4 @@ object Xlsx {
 
   private def appendText(r: XMLStreamReader, sb: java.lang.StringBuilder): Unit =
     sb.append(r.getTextCharacters, r.getTextStart, r.getTextLength)
-
-  /** Descendant elements by local tag name (namespace-prefix tolerant). */
-  private def elements(root: Element, tag: String): Seq[Element] = {
-    val out = mutable.ArrayBuffer.empty[Element]
-    def walk(e: org.w3c.dom.Node): Unit = {
-      var c = e.getFirstChild
-      while (c != null) {
-        c match {
-          case el: Element =>
-            val n = el.getTagName
-            if (n == tag || n.endsWith(":" + tag)) out += el
-            walk(el)
-          case _ =>
-        }
-        c = c.getNextSibling
-      }
-    }
-    walk(root)
-    out.toSeq
-  }
 }

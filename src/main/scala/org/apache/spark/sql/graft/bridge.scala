@@ -33,6 +33,15 @@ object bridge {
       case p => p
     }
 
+  /** Waits until Spark's asynchronous listener bus has delivered every
+    * event posted so far (the drain is package-private to Spark). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** The job tags a job ran under, from its start event's properties. */
+  def jobTags(props: java.util.Properties): Set[String] =
+    Option(props).flatMap(p => Option(p.getProperty(org.apache.spark.SparkContext.SPARK_JOB_TAGS)))
+      .fold(Set.empty[String])(_.split(org.apache.spark.SparkContext.SPARK_JOB_TAGS_SEP).toSet)
+
   /** Number of files the plan's file scans will actually open, AFTER
     * planning-time partition pruning (selectedPartitions is the
     * partition-filtered listing; `DataFrame.inputFiles` ignores filters and

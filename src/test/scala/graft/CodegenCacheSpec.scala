@@ -2,15 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.JobCount
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StructField}
 
 import graft.catalog.Catalog
 import graft.dedup.Dedup
-import graft.ops.{PageRank, Profile}
+import graft.ops.{PageRank, Profile, QueryProfile}
 
 /** Generated code compiles once per JVM: the session's class cache holds
   * the iterative families' working set, so a repeated pass over freshly
@@ -20,11 +18,7 @@ class CodegenCacheSpec extends SparkSpec {
   import spark.implicits._
 
   /** Janino compilations the block caused. */
-  private def compiles(body: => Any): Long = {
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-  }
+  private def compiles(body: => Any): Long = QueryProfile.of(spark)(body)._2.compiles
 
   private lazy val dir = Files.createTempDirectory("codegen_cache").toString
 
@@ -120,9 +114,9 @@ class CodegenCacheSpec extends SparkSpec {
 
     val p = s"$dir/pk_mixed.parquet"
     val cols = Seq("id", "x", "s", "y", "k", "pair")
-    val refJobs = JobCount(spark.sparkContext)(distinctCountKeys(spark.read.parquet(p), cols))._2
-    val (keys, pkJobs) = JobCount(spark.sparkContext)(Catalog.primaryKeyCandidates(spark.read.parquet(p)))
-    assert(keys == Seq("pair") && pkJobs <= refJobs, s"$pkJobs jobs, count_distinct took $refJobs")
+    val refJobs = QueryProfile.of(spark)(distinctCountKeys(spark.read.parquet(p), cols))._2.jobs
+    val (keys, pk) = QueryProfile.of(spark)(Catalog.primaryKeyCandidates(spark.read.parquet(p)))
+    assert(keys == Seq("pair") && pk.jobs <= refJobs, s"${pk.jobs} jobs, count_distinct took $refJobs")
     Profile.profile(spark.read.parquet(p)).collect()
     for (call <- 1 to 3) {
       val n = compiles(Catalog.primaryKeyCandidates(spark.read.parquet(p)))

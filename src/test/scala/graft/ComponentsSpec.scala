@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 
 import graft.dedup.{Dedup, UnionFind}
+import graft.ops.QueryProfile
 
 /** The component family's two paths — the driver union-find under
   * `graft.cc.driverEdgeCap` and the distributed fold over it — proven
@@ -137,19 +137,19 @@ class ComponentsSpec extends SparkSpec {
     spark.sparkContext.parallelize(rows, 4).toDF(a, b)
 
   test("the answer-sized gate: fewer jobs for connectedComponents, no more for the delta fold") {
-    val (cc, ccJobs) = JobCount(spark.sparkContext) {
+    val (cc, ccProfile) = QueryProfile.of(spark) {
       Dedup.connectedComponents(parallel(pinGraph, "a", "b"), "a", "b").collect()
     }
     assert(cc.length == PipelineSpec.unionFind(pinGraph.filter(e => e._1 != e._2)).size)
     // the landing and one probe; a count() before a collect costs two more
-    assert(ccJobs <= 3, s"connectedComponents driver path ran $ccJobs jobs")
-    val (fold, foldJobs) = JobCount(spark.sparkContext) {
+    assert(ccProfile.jobs <= 3, s"connectedComponents driver path ran ${ccProfile.jobs} jobs")
+    val (fold, foldProfile) = QueryProfile.of(spark) {
       Dedup.deltaComponents(parallel(pinMap, "id", "cluster_id"),
         parallel(pinDelta, "id_a", "id_b")).collect()
     }
     assert(fold.nonEmpty)
     // the landing, one probe, the standing-map scan and the relabel
-    assert(foldJobs <= 6, s"deltaComponents driver fold ran $foldJobs jobs")
+    assert(foldProfile.jobs <= 6, s"deltaComponents driver fold ran ${foldProfile.jobs} jobs")
   }
 
   test("an over-cap delta computes each pair row once: the fold continues from the gate's landing") {

@@ -4,13 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.JobCount
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetFooterSchema
 
 import graft.catalog.Catalog
-import graft.ops.Reports
+import graft.ops.{QueryProfile, Reports}
 import graft.sources.Tables
 
 /** The driver-sized steps of an interactive session — a table load, the
@@ -20,7 +19,10 @@ import graft.sources.Tables
 class DriverPathSpec extends SparkSpec {
   import spark.implicits._
 
-  private def jobs[A](body: => A): (A, Int) = JobCount(spark.sparkContext)(body)
+  private def jobs[A](body: => A): (A, Int) = {
+    val (out, p) = QueryProfile.of(spark)(body)
+    (out, p.jobs)
+  }
 
   /** What `Tables.load` gave when Spark inferred the schema itself. */
   private def sparkLoad(dir: String, name: String): DataFrame =

@@ -87,6 +87,10 @@ class QueriesSpec extends SparkSpec {
       val missing = gated -- fullKeys
       assert(missing.isEmpty,
         s"${full.getName} misses gated queries (re-run the round's full bench): $missing")
+      // each profile is a flat object, so the first "}}" closes the map
+      val profiled = "\"queries_profile\":\\{(.*?\\})\\}".r.findFirstMatchIn(fullTxt).fold("")(_.group(1))
+      val unprofiled = gated -- keysOf(profiled)
+      assert(unprofiled.isEmpty, s"${full.getName} has no queries_profile for gated queries: $unprofiled")
     }
   }
 }

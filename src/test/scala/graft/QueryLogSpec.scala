@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.functions._
-import graft.ops.{QueryLog, QueryLogListener}
+import graft.ops.{QueryLog, QueryLogListener, QueryProfile}
 
 class QueryLogSpec extends SparkSpec {
   import spark.implicits._
@@ -74,8 +73,9 @@ class QueryLogSpec extends SparkSpec {
 
   test("maxBuffer bounds listener state: oldest drop, loss surfaces as a dropped_events row") {
     val dir = Files.createTempDirectory("qlog3").toString + "/log"
-    // a late event of an earlier test's actions would count as one of ours
-    ListenerDrain(spark.sparkContext)
+    // a late event of an earlier test's actions would count as one of ours;
+    // a profile returns once the listener bus has delivered every event
+    QueryProfile.of(spark)(())
     val l = QueryLog.install(spark, maxBuffer = 3)
     try {
       (1 to 8).foreach(i => spark.range(i).count())

@@ -102,6 +102,24 @@ class XlsxSpec extends SparkSpec {
     assert(e.getMessage.contains("no sheet"))
   }
 
+  test("sheet relationships: an unprefixed id resolves, an unknown one fails loudly") {
+    val dir = Files.createTempDirectory("xlsx_rels")
+    def book(sheets: String): String = {
+      val wb = dir.resolve(s"book${sheets.hashCode.abs}.xlsx").toString
+      writeWorkbook(wb, Map("xl/workbook.xml" ->
+        s"""<x:workbook xmlns:x="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+           |  xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
+           |<x:sheets>$sheets</x:sheets></x:workbook>""".stripMargin))
+      wb
+    }
+    val unprefixed = book("""<x:sheet name="sales" id="rId2"/><x:sheet name="refunds" r:id="rId1"/>""")
+    assert(Xlsx.listSheets(unprefixed) == Seq("sales", "refunds"))
+    assert(Xlsx.readRows(unprefixed, "sales").map(_.toSeq).last == Seq("9", "APAC"))
+    assert(Xlsx.readRows(unprefixed, "refunds").map(_.toSeq).last == Seq("2", null, "20", "false"))
+    val e = intercept[IllegalStateException](Xlsx.readRows(book("""<x:sheet name="sales" r:id="rId9"/>"""), "sales"))
+    assert(e.getMessage == "unresolved sheet relationship rId9")
+  }
+
   /** The DOM reading the streaming parse replaced, kept as its oracle:
     * every `<si>`'s `getTextContent`; per `<row>`, each `<c>` at its
     * address, valued by its first `<v>`, else its first `<is>`. */
@@ -190,12 +208,26 @@ class XlsxSpec extends SparkSpec {
         |<row r="1"><c r="A1" t="inlineStr"><is><t>&xxe;</t></is></c></row></sheetData></worksheet>""".stripMargin
     val shared = doctype +
       """<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><si><t>&xxe;</t></si></sst>"""
-    for ((part, body) <- Seq("xl/worksheets/sheet1.xml" -> sheet, "xl/sharedStrings.xml" -> shared)) {
+    val workbook = doctype +
+      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+        |  xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
+        |<sheets><sheet name="sales" sheetId="1" r:id="rId1"/></sheets><x>&xxe;</x></workbook>""".stripMargin
+    val rels = doctype +
+      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+        |<Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/><x>&xxe;</x></Relationships>""".stripMargin
+    // every part the reader opens, the workbook and its rels part included
+    val parts = Seq("xl/worksheets/sheet1.xml" -> sheet, "xl/sharedStrings.xml" -> shared,
+      "xl/workbook.xml" -> workbook, "xl/_rels/workbook.xml.rels" -> rels)
+    for ((part, body) <- parts) {
       val wb = dir.resolve(s"book${part.length}.xlsx").toString
       writeWorkbook(wb, Map(part -> body))
-      val e = intercept[javax.xml.stream.XMLStreamException](Xlsx.readRows(wb, "sales"))
-      assert(e.getMessage.contains("DOCTYPE") && e.getMessage.contains(part), e.getMessage)
-      assert(!e.getMessage.contains("TOP-SECRET"))
+      val reads = Seq[() => Any](() => Xlsx.readRows(wb, "sales")) ++
+        (if (part == "xl/workbook.xml") Seq(() => Xlsx.listSheets(wb)) else Nil)
+      for (read <- reads) {
+        val e = intercept[javax.xml.stream.XMLStreamException](read())
+        assert(e.getMessage.contains("DOCTYPE") && e.getMessage.contains(part), e.getMessage)
+        assert(!e.getMessage.contains("TOP-SECRET"))
+      }
     }
   }
 }
