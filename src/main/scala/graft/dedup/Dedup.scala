@@ -1,8 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.{Lineage, PageRank}
+import graft.ops.{AnswerSized, Lineage, PageRank, QueryLog}
 import graft.text.TextAnalysis
 
 /** Deduplication operators for LLM training corpora.
@@ -199,12 +199,16 @@ object Dedup {
       graft.functions.HashFunctions.wordShingleHash(
         TextAnalysis.normalize(col("t")), k, HashPrime),
       ps.map(_._1).toArray, ps.map(_._2).toArray, HashPrime).as("sig"))
+    // landed lazily: the cap's hot-bucket count and its anti-join both
+    // read the band rows, and left unlanded each would run the signature
+    // kernel over every representative
     val buckets = sig
       .select(col("id"), explode(lshBands(col("sig"), bands, rowsPerBand)).as("b"))
       .select(col("id"), col("b.band").as("band"), col("b.bkey").as("bkey"))
+      .localCheckpoint(false)
     // checkpointed: the slim capped bucket table feeds BOTH sides of the
-    // candidate self-join — left lazy, the signature + banding + cap
-    // subtree runs once per side
+    // candidate self-join — left lazy, the banding + cap subtree runs
+    // once per side
     val capped = capBuckets(buckets, Seq("band", "bkey"), maxBucket)
       .localCheckpoint(true)
     // verify first, dedup after: a pair colliding in m bands costs m-1
@@ -214,7 +218,9 @@ object Dedup {
       .join(capped.alias("y"), Seq("band", "bkey"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .filter(col("id_a") < col("id_b"))
-    val verifySets = hashedShingleSets(reps, "t", "id", k, BigPrime)
+    // landed lazily for the same reason: both sides of the verify join
+    // read the shingle sets, so the shingle kernel runs once per doc
+    val verifySets = hashedShingleSets(reps, "t", "id", k, BigPrime).localCheckpoint(false)
     val repPairs = verifyPairsJaccard(candidates, verifySets, threshold)
       .dropDuplicates("id_a", "id_b")
     expandPairs(repPairs, dups, "jaccard", lit(1.0))
@@ -589,31 +595,6 @@ object Dedup {
 
   // ---------------- duplicate clustering (connected components) ----------------
 
-  /** The answer-sized gate behind [[connectedComponents]] and
-    * [[deltaComponents]], and the only reader of `graft.cc.driverEdgeCap`
-    * (default 100k rows ≈ 1.6 MB of id pairs, inside the broadcast
-    * build-side contract; clamped to [0, Int.MaxValue - 1], the largest
-    * limit a probe can take).
-    *
-    * `df` is landed once — an eager [[Lineage.cut]] — and a
-    * `limit(cap + 1)` probe reads the landed blocks in one task. At or
-    * under the cap the probe's rows come back (Left) for the driver; over
-    * it the landed frame does (Right), non-empty, and the distributed path
-    * continues from it, so `df`'s plan runs once on either side of the
-    * cap. With a reliable `checkpointDir` the caller asked for durable
-    * artifacts: the landed frame is returned unprobed. The gate is a
-    * measured row count, never local mode, so a corpus-scale input keeps
-    * the distributed shape. */
-  private def collectIfUnder(df: DataFrame,
-      checkpointDir: Option[String]): Either[Array[Row], DataFrame] = {
-    val landed = Lineage.cut(df, checkpointDir)
-    if (checkpointDir.isDefined) return Right(landed)
-    val cap = df.sparkSession.conf.get("graft.cc.driverEdgeCap", "100000").toLong
-      .max(0L).min(Int.MaxValue - 1L)
-    val probe = landed.coalesce(1).limit(cap.toInt + 1).collect()
-    if (probe.length <= cap) Left(probe) else Right(landed)
-  }
-
   /** Connected components over an undirected pair list — the operator that
     * turns near-duplicate PAIRS into duplicate CLUSTERS (transitive
     * closure), making "keep one per cluster" principled: pair-wise removal
@@ -630,16 +611,16 @@ object Dedup {
     * needs O(diameter) rounds — a pathological dup chain kills it).
     * Lineage is cut every round ([[Lineage]]; a `checkpointDir` stays the
     * session's checkpoint dir); iterative DataFrame plans
-    * otherwise grow without bound. Convergence is detected by a (count,
-    * xor-of-xxhash64) edge-set signature — one tiny
-    * aggregate per round against the checkpointed edges; a false positive
-    * needs a 64-bit xor collision on top of an identical edge count.
+    * otherwise grow without bound. The loop stops on the first round
+    * whose output is a star forest (see `isStarForest` below), so a
+    * converged graph pays no confirming round; the rounds run are noted
+    * as `cc.roundsRun` ([[QueryLog]]).
     *
     * Input rows are (aCol, bCol) node pairs; self-pairs are dropped. The
     * id columns must already be integral (byte/short/int/long).
     *
     * The canonical edge set passes the answer-sized gate
-    * ([[collectIfUnder]]): at or under the cap it is solved on the driver
+    * ([[AnswerSized]]): at or under the cap it is solved on the driver
     * with a [[UnionFind]] and returned as a local relation — identical
     * labels, since both paths converge to component minima, without the
     * fixpoint's per-round scheduling floor. Over the cap, or with a
@@ -658,7 +639,7 @@ object Dedup {
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .distinct()
-    var edges = collectIfUnder(canonical, checkpointDir) match {
+    var edges = AnswerSized.collectIfUnder("cc", canonical, checkpointDir) match {
       case Left(rows) =>
         val uf = new UnionFind
         rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
@@ -701,21 +682,34 @@ object Dedup {
         .distinct()
     }
 
-    // The per-round cut is LAZY: the convergence-signature aggregate
-    // that immediately follows is a full scan, so ONE job materializes
-    // the round's blocks AND reads the signature — the eager form paid a
+    // A star forest — every leaf has one center and no center is a leaf
+    // — is exactly a fixed point of smallStar∘largeStar. The star rounds
+    // keep the components, so each star is one component, and its
+    // center, below all its leaves, is the component minimum. One
+    // map-side-combined aggregate per node counts its edges and its leaf
+    // roles: a leaf with a second edge breaks the certificate.
+    def isStarForest(e: DataFrame): Boolean =
+      e.select(explode(array(
+          struct(col("u").as("x"), lit(0L).as("leaf")),
+          struct(col("v").as("x"), lit(1L).as("leaf")))).as("r"))
+        .groupBy(col("r.x")).agg(sum(col("r.leaf")).as("leaves"), count(lit(1)).as("n"))
+        .filter(col("leaves") > 0 && col("n") > 1)
+        .isEmpty
+
+    // The per-round cut is LAZY: the certificate aggregate that
+    // immediately follows is a full scan, so ONE job materializes the
+    // round's blocks AND reads the certificate — the eager form paid a
     // separate materialization job per round (pure fixed latency on
     // answer-sized graphs, where scheduling, not data, is the round cost).
-    var sig: (Long, Long) = null
     var round = 0
-    while (round < maxRounds) {
-      val next = Lineage.cutLazy(smallStar(largeStar(edges)), checkpointDir)
-      val row = next.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      val nextSig = (row.getLong(0), row.getLong(1))
-      edges = next
-      if (nextSig == sig) round = maxRounds + 1 else { sig = nextSig; round += 1 }
+    var star = false
+    while (!star && round < maxRounds) {
+      edges = Lineage.cutLazy(smallStar(largeStar(edges)), checkpointDir)
+      round += 1
+      star = isStarForest(edges)
     }
-    if (round == maxRounds) throw new IllegalStateException(
+    QueryLog.note("cc.roundsRun", round.toLong)
+    if (!star) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxRounds rounds")
     // converged star edges are exactly (component_min, member)
     edges.select(col("v").as("id"), col("u").as("cluster_id"))
@@ -745,7 +739,7 @@ object Dedup {
     * internal to one standing component collapse to self-loops and cost
     * nothing.
     *
-    * The delta pairs pass the answer-sized gate ([[collectIfUnder]]). At
+    * The delta pairs pass the answer-sized gate ([[AnswerSized]]). At
     * or under the cap the whole fold is orchestrated on the driver: one
     * probe scan collects the touched reps, a [[UnionFind]] merges them,
     * and the merge table feeds the relabel scan. Over the cap the
@@ -775,7 +769,7 @@ object Dedup {
       .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
 
-    val pairs = collectIfUnder(pairs0, checkpointDir) match {
+    val pairs = AnswerSized.collectIfUnder("deltaComponents", pairs0, checkpointDir) match {
       case Left(rows) =>
         val pairsArr = rows.map(r => (r.getLong(0), r.getLong(1)))
         val endpoints = pairsArr.flatMap(p => Array(p._1, p._2)).distinct.sorted

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types._
 
 /** Distributed PageRank as join-based message passing — the iterative
   * graph-analytics capability class beyond the repo's connected
@@ -37,9 +39,13 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * Overflow headroom: Σ ranks stays ≤ n·10⁶, so the damping multiply is
   * < 2⁶³ up to ~10¹² nodes.
   *
-  * The four entry points share one build ([[build]]) and one loop
-  * ([[iterate]]); they differ only in the per-edge contribution, the
-  * spine's teleport and an optional convergence stop.
+  * The four entry points share one gate, one build ([[build]]) and one
+  * loop ([[iterate]]); they differ only in the per-edge contribution,
+  * the spine's teleport and an optional convergence stop. An edge list
+  * at or under the graph family's answer-sized cap ([[AnswerSized]])
+  * runs the same recurrence on the driver and returns a local relation
+  * with the same rows and schema: at that size the distributed rounds
+  * cost jobs, not data work.
   */
 object PageRank {
 
@@ -52,7 +58,7 @@ object PageRank {
   def run(edges: DataFrame, nIters: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(nIters >= 0, "nIters must be non-negative")
-    iterate(build(edges, weighted = false, None, checkpointDir), nIters, None, checkpointDir)._1
+    rank(edges, weighted = false, None, nIters, None, checkpointDir)._1
   }
 
   /** WEIGHTED PageRank — rank mass distributes proportionally to edge
@@ -73,7 +79,7 @@ object PageRank {
   def runWeighted(edges: DataFrame, nIters: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(nIters >= 0, "nIters must be non-negative")
-    iterate(build(edges, weighted = true, None, checkpointDir), nIters, None, checkpointDir)._1
+    rank(edges, weighted = true, None, nIters, None, checkpointDir)._1
   }
 
   /** Personalized PageRank — relevance TO a seed set rather than global
@@ -91,8 +97,7 @@ object PageRank {
   def runPersonalized(edges: DataFrame, seeds: DataFrame, nIters: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(nIters >= 0, "nIters must be non-negative")
-    iterate(build(edges, weighted = false, Some(seeds), checkpointDir), nIters, None,
-      checkpointDir)._1
+    rank(edges, weighted = false, Some(seeds), nIters, None, checkpointDir)._1
   }
 
   /** [[run]] with convergence termination: integer ranks make the
@@ -107,8 +112,7 @@ object PageRank {
   def runToFixpoint(edges: DataFrame, maxIters: Int, tolMu: Long = 0L,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     require(maxIters >= 0 && tolMu >= 0, "maxIters and tolMu must be non-negative")
-    iterate(build(edges, weighted = false, None, checkpointDir), maxIters, Some(tolMu),
-      checkpointDir)
+    rank(edges, weighted = false, None, maxIters, Some(tolMu), checkpointDir)
   }
 
   /** Mismatched src/dst types would make the union'd node spine (and the
@@ -121,6 +125,8 @@ object PageRank {
       "(cast one side explicitly — integral ids halve shuffle width vs strings)")
   }
 
+  private val Integral = Seq(ByteType, ShortType, IntegerType, LongType)
+
   /** Rejects a non-integral id column. A silent cast would turn
     * un-castable strings into NULLs (dropping their edges) and truncate
     * doubles (1.2 and 1.7 becoming one node 1): callers with such ids
@@ -129,10 +135,110 @@ object PageRank {
   private[graft] def requireIntegral(op: String, df: DataFrame, cols: String*): Unit =
     cols.foreach { c =>
       val dt = df.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+      require(Integral.contains(dt),
         s"$op: id column '$c' must be an integral type, got $dt " +
           "(hash or dictionary-encode string ids first)")
     }
+
+  /** The shared path of the four entry points. The (src, dst[, w])
+    * projection passes the answer-sized gate ([[AnswerSized]]): at or
+    * under the cap the recurrence runs on the driver ([[onDriver]]) and
+    * the ranks come back as a local relation; over it, with a reliable
+    * `checkpointDir`, or with a key type other than integral or string,
+    * [[build]] and [[iterate]] continue from the landed projection. The
+    * rounds run are noted as `pagerank.roundsRun` ([[QueryLog]]). */
+  private def rank(edges: DataFrame, weighted: Boolean, seeds: Option[DataFrame],
+      maxIters: Int, tolMu: Option[Long], checkpointDir: Option[String]): (DataFrame, Int) = {
+    requireSameKeyType(edges)
+    val keyT = edges.schema("src").dataType
+    seeds.foreach { s =>
+      val seedT = s.schema("node").dataType
+      require(seedT == keyT,
+        s"seed node type $seedT must equal the edge key type (cast explicitly)")
+    }
+    val w = if (weighted) Seq(col("w").cast("long").as("w")) else Nil
+    val projected = edges.select(col("src") +: col("dst") +: w: _*)
+    val driverKeys = keyT == StringType || Integral.contains(keyT)
+    val (ranks, rounds) =
+      AnswerSized.collectIfUnder("pagerank", projected, checkpointDir, driverKeys) match {
+        case Left(rows) => onDriver(rows, projected, weighted, seeds, maxIters, tolMu)
+        case Right(landed) =>
+          iterate(build(landed, weighted, seeds, checkpointDir), maxIters, tolMu, checkpointDir)
+      }
+    QueryLog.note("pagerank.roundsRun", rounds.toLong)
+    (ranks, rounds)
+  }
+
+  private def requirePositiveWeight(bad: Option[Any]): Unit =
+    require(bad.isEmpty, s"runWeighted: null or non-positive edge weight $bad — " +
+      "weights must be positive integers")
+
+  /** [[iterate]]'s recurrence over the landed (src, dst[, w]) rows, on
+    * the driver, with the distributed plan's semantics: truncating
+    * division, an overflow anywhere the plan would overflow under ANSI
+    * arithmetic fails with an `ArithmeticException`, self-loops and
+    * duplicate edges count once per row, and dangling nodes absorb. A
+    * null id is a node of the spine (teleport only, as no join key
+    * matches it); an edge from it is dropped, and an edge to it still
+    * counts in its source's out-degree but its contribution reaches no
+    * node. `runPersonalized`'s seeds come from one semi-join against the
+    * landed nodes. Returns the ranks as a local relation and the rounds
+    * run. */
+  private def onDriver(rows: Array[Row], projected: DataFrame, weighted: Boolean,
+      seeds: Option[DataFrame], maxIters: Int, tolMu: Option[Long]): (DataFrame, Int) = {
+    val spark = projected.sparkSession
+    if (weighted) requirePositiveWeight(rows.find(r => r.isNullAt(2) || r.getLong(2) <= 0L).map(_.get(2)))
+    val index = scala.collection.mutable.HashMap[Any, Int]()
+    val ids = scala.collection.mutable.ArrayBuffer[Any]()
+    var hasNull = false
+    def node(v: Any): Int =
+      if (v == null) { hasNull = true; -1 }
+      else index.getOrElseUpdate(v, { ids += v; ids.size - 1 })
+    val src = rows.map(r => node(r.get(0)))
+    val dst = rows.map(r => node(r.get(1)))
+    val w = if (weighted) rows.map(_.getLong(2)) else rows.map(_ => 1L)
+    val n = ids.size
+    // the out-degree, or the weight total; an edge from null joins no total
+    val total = new Array[Long](n)
+    for (i <- rows.indices if src(i) >= 0) total(src(i)) = Math.addExact(total(src(i)), w(i))
+    val keyField = projected.schema("src")
+    val tele: Int => Long = seeds match {
+      case None => _ => 150000L
+      case Some(s) =>
+        val nodes = spark.createDataFrame(ids.map(Row(_)).asJava,
+          StructType(Seq(keyField.copy(name = "node"))))
+        val seeded = s.select(col("node")).join(nodes, Seq("node"), "left_semi").collect()
+          .map(r => index(r.get(0))).toSet
+        v => if (v >= 0 && seeded(v)) 150000L else 0L
+    }
+    var r = Array.tabulate(n)(v => if (tele(v) > 0L) 1000000L else 0L)
+    var rNull = if (tele(-1) > 0L) 1000000L else 0L
+    var it = 0
+    var converged = false
+    while (it < maxIters && !converged) {
+      it += 1
+      val sums = new Array[Long](n)
+      var toNull = 0L // the plan's null-dst group: summed, then matched by no node
+      for (i <- rows.indices if src(i) >= 0) {
+        val s = src(i)
+        val c = if (weighted) Math.multiplyExact(r(s), w(i)) / total(s) else r(s) / total(s)
+        if (dst(i) >= 0) sums(dst(i)) = Math.addExact(sums(dst(i)), c)
+        else toNull = Math.addExact(toNull, c)
+      }
+      val next = Array.tabulate(n)(v => Math.addExact(tele(v), Math.multiplyExact(85L, sums(v)) / 100L))
+      tolMu.foreach { tol =>
+        converged = (0 until n).foldLeft(0L)((d, v) => Math.addExact(d, math.abs(next(v) - r(v)))) <= tol
+      }
+      r = next
+      rNull = tele(-1)
+    }
+    val out = ids.indices.map(v => Row(ids(v), r(v))) ++ (if (hasNull) Seq(Row(null, rNull)) else Nil)
+    val schema = StructType(Seq(
+      keyField.copy(name = "node", nullable = keyField.nullable || projected.schema("dst").nullable),
+      // the plan types a round's `div` as nullable, the initial ranks not
+      StructField("rank_mu", LongType, nullable = it > 0)))
+    (spark.createDataFrame(out.asJava, schema), it)
+  }
 
   /** A built graph: the src-partitioned edge store annotated for
     * `contrib` (the per-edge contribution expression) and the node
@@ -142,38 +248,28 @@ object PageRank {
   /** The edge table is the big thing in this algorithm; it is stored
     * EXACTLY ONCE. Node ids keep the caller's type (integral ids halve
     * the shuffle bytes vs strings — encode composite identities
-    * numerically at scale). Build: hash-partition by src FIRST, cache,
-    * then derive the per-source total (`outdeg`, or the weight total
-    * `wtot` when `weighted`) and the annotated edge list WITHOUT further
-    * shuffles (groupBy src and join on src both reuse the partitioning);
+    * numerically at scale). Build: hash-partition the gate's landed
+    * (src, dst[, w]) projection by src FIRST, cache, then derive the
+    * per-source total (`outdeg`, or the weight total `wtot` when
+    * `weighted`) and the annotated edge list WITHOUT further shuffles
+    * (groupBy src and join on src both reuse the partitioning);
     * checkpointed Datasets keep their outputPartitioning, so every
     * round's edges⋈ranks join shuffles only the node-sized ranks side —
     * the edge table never moves again (the q94 write-once amortization,
     * in-memory form). The scratch copy is unpersisted as soon as the
-    * edge store and spine materialize, so peak storage is one edge
-    * table. The spine teleports 150000 to every node, or — with `seeds`
-    * — to the seeds only, joined in once at build time (zero per-round
-    * cost). */
-  private def build(edges: DataFrame, weighted: Boolean, seeds: Option[DataFrame],
+    * edge store and spine materialize. The spine teleports 150000 to
+    * every node, or — with `seeds` — to the seeds only, joined in once
+    * at build time (zero per-round cost). */
+  private def build(landed: DataFrame, weighted: Boolean, seeds: Option[DataFrame],
       checkpointDir: Option[String]): Graph = {
-    requireSameKeyType(edges)
-    seeds.foreach { s =>
-      val seedT = s.schema("node").dataType
-      require(seedT == edges.schema("src").dataType,
-        s"seed node type $seedT must equal the edge key type (cast explicitly)")
-    }
-    val w = if (weighted) Seq(col("w").cast("long").as("w")) else Nil
-    val e0 = edges.select(col("src") +: col("dst") +: w: _*)
-      .repartition(col("src"))
+    val e0 = landed.repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (weighted) {
       // bounded check; isNull clause because null <= 0 is null (filtered
       // out) — a NULL weight must fail as loudly as a non-positive one,
       // not silently deflate ranks through sum()'s null-dropping
-      val bad = e0.filter(col("w").isNull || col("w") <= 0L).limit(1).collect()
-      require(bad.isEmpty,
-        s"runWeighted: null or non-positive edge weight ${bad.headOption.map(_.get(2))} — " +
-          "weights must be positive integers")
+      requirePositiveWeight(
+        e0.filter(col("w").isNull || col("w") <= 0L).limit(1).collect().headOption.map(_.get(2)))
     }
     val total = if (weighted) sum(col("w")).as("wtot") else count(lit(1)).as("outdeg")
     val store = Lineage.cut(e0.join(e0.groupBy("src").agg(total), "src"), checkpointDir)

@@ -81,7 +81,7 @@ class QueryLogListener(maxBuffer: Int = QueryLog.DefaultMaxBuffer)
 
   /** Operator-emitted structured note (status "note"): facts the
     * listener callbacks can't see — e.g. how many rounds an iterative
-    * fixpoint actually ran before converging (q100 notes `roundsRun`).
+    * fixpoint actually ran before converging (`pagerank.roundsRun`).
     * Same buffer, same flush path, same drop-oldest cap. */
   def note(op: String, rows: Long): Unit =
     offer(QueryLogEvent(System.currentTimeMillis(), op, "note", rows, -1L, null))

@@ -795,9 +795,9 @@ object RelationalQueries {
       // reproduces itself bit-for-bit, so early stop is ANSWER-INVARIANT
       // and the unrolled 3-round oracle stays exact — while a converged
       // graph skips the dead rounds (the bench then measures the win).
-      // roundsRun lands in the query log as an operator note.
-      val (ranks, rounds) = PageRank.runToFixpoint(edges, maxIters = 3)
-      QueryLog.note("q100_pagerank.roundsRun", rounds.toLong)
+      // PageRank notes its rounds run in the query log
+      // (`pagerank.roundsRun`).
+      val (ranks, _) = PageRank.runToFixpoint(edges, maxIters = 3)
       ranks.orderBy(desc("rank_mu"), $"node")
         .limit(20)
     }, Some("""

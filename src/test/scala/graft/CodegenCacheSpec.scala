@@ -55,6 +55,20 @@ class CodegenCacheSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/minhash").count() > 0, "the documents hold no near-duplicate pair")
   }
 
+  test("a plan whose stages come back under other codegen ids compiles nothing the second time") {
+    val t = spark.read.parquet(save((0 until 200).map(i => (i % 7L, i.toLong, i * 3L)).toDF("k", "v", "x"),
+      "swap"))
+    val a = t.groupBy("k").agg(sum($"v" * 11 + $"x").as("s"))
+    val b = t.groupBy("k").agg(max($"x" - $"v" * 13).as("s"))
+    // AQE numbers the stages in plan order, so the second union plans
+    // each side's stages at the other side's ids
+    def swapped(): Long = { a.unionByName(b).collect(); compiles(b.unionByName(a).collect()) }
+    val withIds = withConf("spark.sql.codegen.useIdInClassName", "true")(swapped())
+    assert(withIds > 0, "the swapped plan reused every class even with stage ids in the class names")
+    val n = swapped()
+    assert(n == 0, s"the swapped plan compiled $n classes")
+  }
+
   /** The aggregate `primaryKeyCandidates` had: one `count_distinct` per
     * column, which Spark rewrites into an expand. */
   private def distinctCountKeys(df: DataFrame, cols: Seq[String]): Seq[String] = {

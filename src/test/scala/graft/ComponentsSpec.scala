@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 
 import graft.dedup.{Dedup, UnionFind}
@@ -82,6 +83,38 @@ class ComponentsSpec extends SparkSpec {
     })
   }
 
+  /** Chains and hubs over shuffled ids: shapes the star rounds need
+    * several rounds to fold. */
+  private val deepGraphs: Gen[Seq[(Long, Long)]] = for {
+    seed <- Gen.choose(0L, Long.MaxValue)
+    chains <- Gen.choose(1, 3)
+    len <- Gen.choose(24, 60)
+    hubs <- Gen.choose(0, 2)
+  } yield {
+    val ids = new scala.util.Random(seed).shuffle((0L until 400L).toList).toIndexedSeq
+    val chainEdges = (0 until chains).flatMap { c =>
+      (0 until len - 1).map(i => (ids(c * 100 + i), ids(c * 100 + i + 1)))
+    }
+    // a hub joins the chains' far ends with a fan of spokes on fresh ids
+    val hubEdges = (0 until hubs).flatMap { h =>
+      val hub = ids(350 + h)
+      (0 until chains).map(c => (hub, ids(c * 100 + len - 1 - h))) ++
+        (0 until 10).map(k => (hub, ids(300 + h * 20 + k)))
+    }
+    chainEdges ++ hubEdges
+  }
+
+  test("connectedComponents: cap=0 ≡ the reference on chains and hubs that take 3 or more rounds") {
+    check(3)(Prop.forAll(deepGraphs) { g =>
+      val df = g.toDF("a", "b")
+      var dist = Map.empty[Long, Long]
+      val rounds = notes {
+        dist = withConf(Cap, "0")(labels(Dedup.connectedComponents(df, "a", "b")))
+      }.collect { case ("cc.roundsRun", n) => n }
+      (dist == PipelineSpec.unionFind(g)) :| "labels" && (rounds.size == 1 && rounds.head >= 3) :| s"rounds $rounds"
+    })
+  }
+
   test("deltaComponents: cap=0 ≡ the default cap ≡ a full recompute's label changes") {
     val folds = for {
       g <- graphs
@@ -150,6 +183,19 @@ class ComponentsSpec extends SparkSpec {
     assert(fold.nonEmpty)
     // the landing, one probe, the standing-map scan and the relabel
     assert(foldProfile.jobs <= 6, s"deltaComponents driver fold ran ${foldProfile.jobs} jobs")
+  }
+
+  test("an over-cap graph of 2- and 3-node components stops on the star certificate, with fewer jobs") {
+    val comps: Seq[(Long, Long)] = (0 until 150).flatMap { c =>
+      val b = c * 10L
+      if (c % 2 == 0) Seq((b + 1, b)) else Seq((b + 2, b + 1), (b + 1, b))
+    }
+    val (got, p) = QueryProfile.of(spark) {
+      withConf(Cap, "10")(labels(Dedup.connectedComponents(parallel(comps, "a", "b"), "a", "b")))
+    }
+    assert(got == PipelineSpec.unionFind(comps))
+    // the parent's confirming-round fixpoint ran 23 jobs on this input
+    assert(p.jobs < 23, s"over-cap connectedComponents ran ${p.jobs} jobs")
   }
 
   test("an over-cap delta computes each pair row once: the fold continues from the gate's landing") {

@@ -9,7 +9,7 @@ import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 
 import graft.dedup.Dedup
-import graft.ops.{Bfs, LabelProp, Lineage, PageRank, QueryLog, Scc, Sssp}
+import graft.ops.{Bfs, LabelProp, Lineage, PageRank, Scc, Sssp}
 
 /** The iterative graph operators' merged paths: PageRank's entry points
   * agree wherever their recurrences coincide, every operator that takes
@@ -55,6 +55,53 @@ class IterativeSpec extends SparkSpec {
           "runWeighted" &&
         (rows(PageRank.runPersonalized(e, nodes, n)) == ref) :| "runPersonalized"
     })
+  }
+
+  private val Cap = "graft.cc.driverEdgeCap"
+
+  /** A random graph plus a dangling node, an edge from and an edge to a
+    * null id, as long or string ids: (edges, weighted edges carrying 1–4,
+    * seeds holding a graph node, a node not in the graph and a null). */
+  private def rankCase(g: Seq[(Long, Long)], asString: Boolean): (DataFrame, DataFrame, DataFrame) = {
+    val rows: Seq[(Option[Long], Option[Long])] = g.map { case (a, b) => (Some(a), Some(b)) } ++
+      Seq((Some(g.head._1), Some(1000L)), (None, Some(g.head._2)), (Some(g.head._1), None))
+    def ids(df: DataFrame, cols: String*): DataFrame =
+      if (!asString) df
+      else df.select(df.columns.map(c => if (cols.contains(c)) df(c).cast("string").as(c) else df(c)): _*)
+    (ids(rows.toDF("src", "dst"), "src", "dst"),
+      ids(rows.zipWithIndex.map { case ((a, b), i) => (a, b, 1L + i % 4) }.toDF("src", "dst", "w"),
+        "src", "dst"),
+      ids(Seq(Some(g.head._1), Some(999L), None).toDF("node"), "node"))
+  }
+
+  test("PageRank: every entry point gives the same rows, schema and rounds under the cap as over it") {
+    def result(df: DataFrame) = (rows(df), df.schema)
+    // (string ids, rounds, runToFixpoint's tolerance), one per sample
+    val settings = Iterator.continually(Seq((false, 0, 0L), (true, 2, 2000L), (false, 3, 0L))).flatten
+    check(3)(Prop.forAll(graphs) { g =>
+      val (asString, n, tol) = settings.next()
+      val (e, w, seeds) = rankCase(g, asString)
+      def all() = Seq(
+        "run" -> result(PageRank.run(e, n)),
+        "runWeighted" -> result(PageRank.runWeighted(w, n)),
+        "runPersonalized" -> result(PageRank.runPersonalized(e, seeds, n)),
+        "runToFixpoint" -> { val (r, k) = PageRank.runToFixpoint(e, n + 3, tol); (result(r), k) })
+      val driver = all()
+      val dist = withConf(Cap, "0")(all())
+      val wrong = driver.zip(dist).collect { case ((name, a), (_, b)) if a != b => s"$name: $a vs $b" }
+      wrong.isEmpty :| s"string ids $asString, $n rounds: ${wrong.mkString("; ")}"
+    })
+  }
+
+  test("PageRank overflow fails loudly under the cap as over it") {
+    // 10⁶ · 10¹³ > 2⁶³: the first round's weighted share overflows
+    val e = Seq((1L, 2L, 10000000000000L), (1L, 3L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
+    def arithmetic(t: Throwable): Boolean =
+      t != null && (t.isInstanceOf[ArithmeticException] || arithmetic(t.getCause))
+    for (cap <- Seq("100000", "0")) {
+      val ex = intercept[Exception](withConf(Cap, cap)(PageRank.runWeighted(e, 1).collect()))
+      assert(arithmetic(ex), s"cap=$cap: $ex")
+    }
   }
 
   test("Sssp: runToFixpoint ≡ runRounds for the rounds it ran") {
@@ -134,17 +181,12 @@ class IterativeSpec extends SparkSpec {
     // to travel round it
     def cycle(n: Int) = (0 until n).map(i => (i.toLong, (i + 1L) % n)).toDF("src", "dst")
     /** The `scc.propSteps` notes `body` leaves, sorted. */
-    def notes(body: => Unit): Seq[Long] = {
-      val dir = Files.createTempDirectory("scc_notes").toString
-      val l = QueryLog.install(spark)
-      try { body; l.flush(spark, dir) } finally QueryLog.uninstall(spark, l)
-      spark.read.parquet(dir).filter($"op" === "scc.propSteps").select($"rows").as[Long]
-        .collect().sorted.toSeq
-    }
-    val short = notes(Scc.scc(cycle(3), "src", "dst").collect())
-    val long = notes(Scc.scc(cycle(9), "src", "dst").collect())
+    def steps(body: => Unit): Seq[Long] =
+      notes(body).collect { case ("scc.propSteps", n) => n }.sorted
+    val short = steps(Scc.scc(cycle(3), "src", "dst").collect())
+    val long = steps(Scc.scc(cycle(9), "src", "dst").collect())
     assert(short.size == 1 && long.size == 1 && short.head < long.head, s"$short vs $long")
-    val both = notes {
+    val both = steps {
       val calls = Seq(3, 9).map(n => new Thread(() => Scc.scc(cycle(n), "src", "dst").collect()))
       calls.foreach(_.start())
       calls.foreach(_.join())

@@ -37,6 +37,26 @@ class PipelineSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L)))
   }
 
+  test("minHashPairs reads each document's text once for fingerprints, once for signatures, once for verify sets") {
+    val words = Seq("delta", "lake", "spark", "graph", "merge", "table", "query", "plan", "join", "scan")
+    // i % 3 == 0 and 1 are exact duplicates, i % 3 == 2 a near duplicate
+    val docs = (0 until 60).map(i => (i.toLong, (0 until 25).map(w =>
+      words((i / 3 * 7 + w * (w + 3) + (if (i % 3 == 2) w % 2 else 0)) % words.size)).mkString(" ")))
+    val path = java.nio.file.Files.createTempDirectory("minhash_reads").toString + "/docs"
+    docs.toDF("doc_id", "text").repartition(2).write.parquet(path)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.minHashPairs(df, "text", "doc_id").as[(Long, Long, Double)].collect().toSeq
+    val want = pairs(spark.read.parquet(path))
+    val reads = spark.sparkContext.longAccumulator("text reads")
+    val tally = udf { (t: String) => reads.add(1); t }.asNondeterministic()
+    val got = pairs(spark.read.parquet(path).select($"doc_id", tally($"text").as("text")))
+    assert(got == want && got.nonEmpty)
+    // a file-sized input joins its representatives by broadcast, so each
+    // kernel's stage reads the text itself: with the band rows or the
+    // verify sets unlanded, a second copy of a kernel reads it again
+    assert(reads.value == 3L * docs.size, s"${reads.value} text reads for ${docs.size} documents")
+  }
+
   test("simHash is identical for identical token multisets, and pairs verify") {
     val df = Seq((1L, "alpha beta gamma"), (2L, "alpha  beta gamma"), (3L, "zz yy xx ww"))
       .toDF("id", "t")

@@ -71,6 +71,31 @@ class QueryLogSpec extends SparkSpec {
     assert(l.pending == p0)
   }
 
+  test("the answer-sized gate notes one path per call on each side of the cap, and the loops their rounds") {
+    import graft.dedup.Dedup
+    import graft.ops.PageRank
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
+    val sm = Seq((1L, 1L), (2L, 1L)).toDF("id", "cluster_id")
+    val delta = Seq((2L, 5L), (7L, 8L)).toDF("id_a", "id_b")
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L)).toDF("src", "dst")
+    def paths(ns: Seq[(String, Long)]) = ns.filter(n => n._1.endsWith(".driverPath") || n._1.endsWith(".distributed"))
+    for ((cap, path) <- Seq("100000" -> "driverPath", "0" -> "distributed")) withConf("graft.cc.driverEdgeCap", cap) {
+      val cc = notes(Dedup.connectedComponents(pairs, "a", "b").collect())
+      assert(paths(cc).map(_._1) == Seq(s"cc.$path"), s"cap=$cap: $cc")
+      val fold = notes(Dedup.deltaComponents(sm, delta).collect())
+      // over the cap the fold solves its rep graph with connectedComponents
+      val inner = if (cap == "0") Seq("cc.distributed") else Nil
+      assert(paths(fold).map(_._1) == s"deltaComponents.$path" +: inner, s"cap=$cap: $fold")
+      val pr = notes(PageRank.run(edges, 2).collect())
+      assert(paths(pr).map(_._1) == Seq(s"pagerank.$path") && pr.contains("pagerank.roundsRun" -> 2L),
+        s"cap=$cap: $pr")
+    }
+    // the probed rows ride the note: the landed edges under the cap
+    assert(notes(Dedup.connectedComponents(pairs, "a", "b").collect()).contains("cc.driverPath" -> 3L))
+    val rounds = withConf("graft.cc.driverEdgeCap", "0")(notes(Dedup.connectedComponents(pairs, "a", "b").collect()))
+    assert(rounds.count(_._1 == "cc.roundsRun") == 1, rounds)
+  }
+
   test("maxBuffer bounds listener state: oldest drop, loss surfaces as a dropped_events row") {
     val dir = Files.createTempDirectory("qlog3").toString + "/log"
     // a late event of an earlier test's actions would count as one of ours;
