@@ -1,7 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.ops.{AnswerSized, Lineage, PageRank, QueryLog}
 import graft.text.TextAnalysis
 
@@ -82,25 +86,29 @@ object Dedup {
   }
 
 
+  /** The slim (id, fp) projection: one normalized-text fingerprint per
+    * document, the key of the pre-banding exact collapse. */
+  private def fingerprints(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    df.select(col(idCol).as("id"), TextAnalysis.fingerprint(col(textCol)).as("fp"))
+
   /** The pre-banding exact collapse both banding pipelines share, shaped
     * around fingerprinting the corpus exactly ONCE: the slim (id, fp)
-    * projection is checkpointed (ids + 32-byte hashes — at 100 TB this is
-    * the ~tens-of-GB-per-executor spill-backed class, orders below the
-    * text it fingerprints), the per-fingerprint aggregate carries only
-    * (rep id, member count) — no text ever rides the aggregation exchange
-    * (`first(t)` dragged the full corpus text through shuffle partials;
-    * measured 2.7 → 1.4 s on q28 at sf0.1) — and both consumers derive
-    * from those two artifacts: `reps` (id, t) fetches the representative
-    * text back by an id equi-join, `dups` (id, rep) joins the SAME
-    * checkpointed fingerprints against the multi-member groups (no second
-    * fingerprint pass). All map-side-combinable aggregates and
-    * AQE-skew-splittable joins — never a window over the fingerprint (a
-    * 10⁸-page boilerplate cluster combines map-side; the checkpoint's
-    * exact stats let AQE broadcast the dup-group side whenever it fits). */
-  private def collapseExact(df: DataFrame, textCol: String,
-      idCol: String): (DataFrame, DataFrame) = {
-    val withFp = df.select(col(idCol).as("id"),
-      TextAnalysis.fingerprint(col(textCol)).as("fp")).localCheckpoint(true)
+    * projection arrives landed (`withFp`: ids + 32-byte hashes — at
+    * 100 TB this is the ~tens-of-GB-per-executor spill-backed class,
+    * orders below the text it fingerprints), the per-fingerprint
+    * aggregate carries only (rep id, member count) — no text ever rides
+    * the aggregation exchange (`first(t)` dragged the full corpus text
+    * through shuffle partials; measured 2.7 → 1.4 s on q28 at sf0.1) —
+    * and both consumers derive from those two artifacts: `reps` (id, t)
+    * fetches the representative text back by an id equi-join, `dups`
+    * (id, rep) joins the SAME landed fingerprints against the
+    * multi-member groups (no second fingerprint pass). All
+    * map-side-combinable aggregates and AQE-skew-splittable joins —
+    * never a window over the fingerprint (a 10⁸-page boilerplate cluster
+    * combines map-side; the landed copy's exact stats let AQE broadcast
+    * the dup-group side whenever it fits). */
+  private def collapseExact(df: DataFrame, textCol: String, idCol: String,
+      withFp: DataFrame): (DataFrame, DataFrame) = {
     val collapsed = withFp.groupBy("fp")
       .agg(min(col("id")).as("id"), count(lit(1)).as("n")).localCheckpoint(true)
     val reps = df.select(col(idCol).as("id"), col(textCol).as("t"))
@@ -161,16 +169,15 @@ object Dedup {
       ps.map(_._1).toArray, ps.map(_._2).toArray, HashPrime)
   }
 
-  /** Explode a signature into (band, bandKey) LSH bucket keys. */
+  /** A signature's (band, bkey) LSH bucket keys, one per band, from the
+    * native `lsh_band_keys` kernel: bkey is `xxhash64(b, the band's
+    * comma-joined decimal slice)`. */
   def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(lit(b), array_join(transform(
-          slice(sig, b * rowsPerBand + 1, rowsPerBand), x => x.cast("string")), ",")).as("bkey"))
-    }: _*)
+    graft.functions.HashFunctions.lshBandKeys(sig, bands, rowsPerBand)
 
   /** Near-duplicate pairs by MinHash LSH, verified with exact Jaccard over
-    * shingle sets. Returns (id_a, id_b, jaccard) with id_a < id_b.
+    * shingle sets. Returns (id_a, id_b, jaccard) with id_a < id_b, sorted
+    * on (id_a, id_b).
     *
     * Recall: a pair at Jaccard J collides in ≥1 band with probability
     * 1-(1-J^r)^bands (r = numPerm/bands). The 21×3 default gives
@@ -179,26 +186,45 @@ object Dedup {
     *
     * Hot-bucket guards: exact duplicates are collapsed to one representative
     * before banding (then expanded back into the answer), and buckets larger
-    * than maxBucket are dropped from candidate generation. */
+    * than maxBucket are dropped from candidate generation.
+    *
+    * The (id, fp) fingerprints pass the answer-sized gate
+    * ([[AnswerSized]], op `minhash`). At or under the cap, with an
+    * integral id, the pairs are finished on the driver ([[pairsOnDriver]])
+    * and come back as a sorted local relation with the distributed path's
+    * rows and schema. Over the cap, or with any other id type, the
+    * distributed pipeline continues from the landed fingerprints. */
   def minHashPairs(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.5, numPerm: Int = 64, bands: Int = 21,
       k: Int = 3, maxBucket: Int = 100000): DataFrame = {
     val rowsPerBand = numPerm / bands
     require(rowsPerBand >= 1, s"bands=$bands exceeds numPerm=$numPerm")
-    val ps = perms(numPerm, 42L)
+    val withFp = fingerprints(df, textCol, idCol)
+    val idField = withFp.schema("id")
+    val landed = AnswerSized.collectIfUnder("minhash", withFp, None,
+        driverSolvable = PageRank.Integral.contains(idField.dataType)) match {
+      case Left(rows) =>
+        pairsOnDriver(df, textCol, idCol, rows, idField, threshold, numPerm, bands, k,
+            maxBucket) match {
+          case Some(pairs) => return pairs
+          case None =>
+            // the answer outgrew the cap on the driver: continue
+            // distributed from the landed rows
+            QueryLog.note("minhash.distributed", rows.length.toLong)
+            df.sparkSession.createDataFrame(rows.toSeq.asJava, withFp.schema)
+        }
+      case Right(landed) => landed
+    }
     // one row per distinct normalized text — see [[collapseExact]] for the
     // single-fingerprint-pass shape shared with simHashPairs
-    val (reps, dups) = collapseExact(df, textCol, idCol)
+    val (reps, dups) = collapseExact(df, textCol, idCol, landed)
     // Fully native pipeline: hashed shingle sets in one codegen pass (no
-    // string shingles materialized), native signature kernel, slim
-    // (id, band, bkey) band rows so the shuffle never moves arrays.
-    // 31-bit hashes feed the signature; a separate 61-bit set feeds the
-    // exact-Jaccard verify (collision-free), joined back only for
-    // surviving candidate pairs.
-    val sig = reps.select(col("id"), graft.functions.HashFunctions.minHashSig(
-      graft.functions.HashFunctions.wordShingleHash(
-        TextAnalysis.normalize(col("t")), k, HashPrime),
-      ps.map(_._1).toArray, ps.map(_._2).toArray, HashPrime).as("sig"))
+    // string shingles materialized), native signature and band-key
+    // kernels, slim (id, band, bkey) band rows so the shuffle never moves
+    // arrays. 31-bit hashes feed the signature; a separate 61-bit set
+    // feeds the exact-Jaccard verify (collision-free), joined back only
+    // for surviving candidate pairs.
+    val sig = reps.select(col("id"), minHashSignature(col("t"), numPerm, k).as("sig"))
     // landed lazily: the cap's hot-bucket count and its anti-join both
     // read the band rows, and left unlanded each would run the signature
     // kernel over every representative
@@ -225,6 +251,126 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
     expandPairs(repPairs, dups, "jaccard", lit(1.0))
       .orderBy("id_a", "id_b")
+  }
+
+  /** [[minHashPairs]] finished on the driver from the landed (id, fp)
+    * rows, with the distributed pipeline's semantics step for step:
+    *  1. group the fingerprints: each group's min id represents it (the
+    *     null-fp group too), and only non-null fingerprints with more
+    *     than one row form duplicate groups (the fp equi-join);
+    *  2. one job fetches the representatives' band keys;
+    *  3. bucket on (band, bkey), drop buckets above maxBucket, form the
+    *     id_a < id_b candidates;
+    *  4. one job fetches the 61-bit verify sets of the candidate
+    *     documents only;
+    *  5. verify by a sorted-merge intersection — the kernel emits sorted,
+    *     distinct arrays, so i / (|A| + |B| − i) is exactly
+    *     size(array_intersect) / size(array_union); a null set drops the
+    *     pair;
+    *  6. expand through the duplicate groups (cross pairs, intra-group
+    *     pairs at 1.0) and sort on (id_a, id_b).
+    * Driver memory is bounded by the cap: the fixed-width landed rows,
+    * `bands` keys per representative, shingle sets of candidate documents
+    * only, and at most cap pairs — None, once the intra-group pairs plus
+    * the candidates' expanded pairs would pass the cap; the caller then
+    * notes `minhash.distributed` and continues from the landed rows. */
+  private def pairsOnDriver(df: DataFrame, textCol: String, idCol: String,
+      fpRows: Array[Row], idField: StructField, threshold: Double, numPerm: Int,
+      bands: Int, k: Int, maxBucket: Int): Option[DataFrame] = {
+    val spark = df.sparkSession
+    val cap = AnswerSized.cap(spark)
+    val byFp = fpRows.groupBy(r => Option(r.getString(1)))
+      .map { case (fp, g) => fp -> g.map(r => if (r.isNullAt(0)) None else Some(r.getAs[Number](0).longValue)) }
+    val reps = byFp.values.flatMap(_.flatten.minOption).toArray
+    // rep → member rows of its duplicate group; a null member id expands
+    // to the rep itself, as the left join's coalesce does
+    val members: Map[Long, Array[Option[Long]]] = byFp.toSeq
+      .collect { case (Some(_), ids) if ids.length > 1 => ids }
+      .flatMap(ids => ids.flatten.minOption.map(_ -> ids))
+      .groupMapReduce(_._1)(_._2)(_ ++ _)
+    def expanded(rep: Long): Array[Long] = members.get(rep).fold(Array(rep))(_.map(_.getOrElse(rep)))
+
+    val out = mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    members.values.foreach { ids =>
+      val m = ids.flatten.sorted
+      for (i <- m.indices; j <- i + 1 until m.length if m(i) < m(j)) out += ((m(i), m(j), 1.0))
+    }
+    if (out.length > cap) return None
+
+    // the documents' (id, text) rows whose id is in `ids`: one scan
+    // under an InSet filter (a broadcast local relation would pay a job
+    // of its own to build)
+    def fetch(ids: Iterable[Long]): DataFrame =
+      df.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
+        .filter(org.apache.spark.sql.graft.bridge.inSet(col("id"), ids.toSet))
+    val rowsPerBand = numPerm / bands
+    val buckets = Array.fill(bands)(mutable.LongMap.empty[mutable.ArrayBuffer[Long]])
+    fetch(reps)
+      .select(col("id"), minHashSignature(col("t"), numPerm, k).as("sig"))
+      .select(col("id"), lshBands(col("sig"), bands, rowsPerBand).as("b"))
+      .collect().foreach { r =>
+        val id = r.getLong(0)
+        r.getSeq[Row](1).foreach(b =>
+          buckets(b.getInt(0)).getOrElseUpdate(b.getLong(1), mutable.ArrayBuffer.empty) += id)
+      }
+    // candidates, each weighted by the pairs it expands to
+    var budget = cap - out.length
+    val candidates = mutable.HashSet.empty[(Long, Long)]
+    val kept = buckets.iterator.flatMap(_.valuesIterator).filter(_.length <= maxBucket)
+    while (budget >= 0 && kept.hasNext) {
+      val ids = kept.next()
+      var i = 0
+      while (budget >= 0 && i < ids.length) {
+        var j = i + 1
+        while (budget >= 0 && j < ids.length) {
+          val (a, b) = (ids(i) min ids(j), ids(i) max ids(j))
+          if (a < b && candidates.add((a, b)))
+            budget -= expanded(a).length.toLong * expanded(b).length
+          j += 1
+        }
+        i += 1
+      }
+    }
+    if (budget < 0) return None
+
+    val sets = mutable.LongMap.empty[Array[Long]]
+    hashedShingleSets(fetch(candidates.iterator.flatMap(p => Iterator(p._1, p._2)).toSet),
+        "t", "id", k, BigPrime)
+      .collect().foreach(r => if (!r.isNullAt(1)) sets(r.getLong(0)) = r.getSeq[Long](1).toArray)
+    candidates.foreach { case (a, b) =>
+      for (sa <- sets.get(a); sb <- sets.get(b)) {
+        val i = intersectionSize(sa, sb)
+        val jaccard = i.toDouble / (sa.length + sb.length - i)
+        if (jaccard >= threshold)
+          for (ma <- expanded(a); mb <- expanded(b)) out += ((ma min mb, ma max mb, jaccard))
+      }
+    }
+
+    val box: Long => Any = idField.dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val schema = StructType(Seq(
+      StructField("id_a", idField.dataType, idField.nullable),
+      StructField("id_b", idField.dataType, idField.nullable),
+      StructField("jaccard", DoubleType)))
+    val rows = out.sortInPlaceBy(p => (p._1, p._2)).map(p => Row(box(p._1), box(p._2), p._3))
+    Some(spark.createDataFrame(rows.asJava, schema))
+  }
+
+  /** |A ∩ B| of two sorted arrays of distinct values. */
+  private def intersectionSize(a: Array[Long], b: Array[Long]): Int = {
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
   }
 
   /** LSH buckets that exceeded maxBucket for this banding (band, bkey, size)
@@ -314,7 +460,8 @@ object Dedup {
       s"maxHamming=$maxHamming outside [0, 63]: a 64-bit SimHash cannot band for it")
     val nBands = maxHamming + 1
     // collapse via the shared single-fingerprint-pass shape
-    val (reps, dups) = collapseExact(df, textCol, idCol)
+    val (reps, dups) = collapseExact(df, textCol, idCol,
+      fingerprints(df, textCol, idCol).localCheckpoint(true))
     val withSim = reps.select(col("id"), simHash64(col("t"), tokenHash).as("sim"))
     val chunked = withSim
       .select(col("id"), col("sim"), explode(simHashChunks(col("sim"), nBands)).as("c"))

@@ -11,8 +11,9 @@ import graft.{GraftSession, SparkEntry}
   * (unknown names and flags are refused with usage text and exit 2)
   */
 object PlanCheck {
+  /** `conf` is set while the query's plan is built, then restored. */
   private case class Want(query: String, mustContain: Seq[(String, String)],
-      mustNotContain: Seq[(String, String)] = Seq.empty)
+      mustNotContain: Seq[(String, String)] = Seq.empty, conf: Map[String, String] = Map.empty)
 
   private val audits = Seq(
     Want("q2_filter_project", Seq(
@@ -477,13 +478,17 @@ object PlanCheck {
     // the signature/banding stages sit behind the collapse + capped-bucket
     // checkpoints (erased from the FINAL plan by design — the
     // dedup_kernels section below audits the native kernels on the stage
-    // plans directly); the verify kernel runs downstream and stays visible
+    // plans directly); the verify kernel runs downstream and stays visible.
+    // Test-scale corpora sit under the answer-sized cap, where the pairs
+    // are finished on the driver (dedup_kernels checks that path), so the
+    // distributed plan is built at cap 0.
     Want("q28_dedup_minhash", Seq(
       "exact-Jaccard verify kernel" -> "array_intersect"),
       mustNotContain = Seq(
         "no hot-fingerprint window in the exact collapse" -> "Window",
         "no cartesian candidate generation" -> "CartesianProduct",
-        "no all-pairs nested loop" -> "BroadcastNestedLoopJoin")),
+        "no all-pairs nested loop" -> "BroadcastNestedLoopJoin"),
+      conf = Map("graft.cc.driverEdgeCap" -> "0")),
     Want("q29_dedup_simhash", Seq.empty,
       mustNotContain = Seq(
         "no hot-fingerprint window in the exact collapse" -> "Window",
@@ -1219,7 +1224,10 @@ object PlanCheck {
     val wanted = if (args.nonEmpty) audits.filter(a => args.contains(a.query)) else audits
     var failed = 0
     wanted.foreach { a =>
-      val df = SparkEntry.queries(a.query)(spark, dir)
+      val prior = a.conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      a.conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val df = try SparkEntry.queries(a.query)(spark, dir)
+        finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       println(s"\n========== ${a.query} ==========")
@@ -1312,11 +1320,21 @@ object PlanCheck {
         graft.dedup.Dedup.minHashSignature(col("text")).as("sig")))
       val simPlan = planOf(docs.select(
         graft.dedup.Dedup.simHash64(col("text")).as("sim")))
+      val bandPlan = planOf(docs.select(graft.dedup.Dedup.lshBands(
+        graft.dedup.Dedup.minHashSignature(col("text")), 21, 3).as("b")))
+      // at the default cap this corpus is answer-sized: the pairs are
+      // finished on the driver and q28 reads a local relation
+      val driverPlan = planOf(SparkEntry.queries("q28_dedup_minhash")(spark, dir))
       println(s"\n========== dedup_kernels (q28/q29) ==========")
+      println(driverPlan.linesIterator.take(12).mkString("\n"))
       val checks = Seq(
         "native minhash signature kernel" -> sigPlan.contains("minhash_sig"),
         "native shingle-hash kernel" -> sigPlan.contains("word_shingle_hash"),
-        "native simhash kernel" -> simPlan.contains("simhash64"))
+        "native band-key kernel, no lambda" ->
+          (bandPlan.contains("lsh_band_keys") && !bandPlan.contains("lambda")),
+        "native simhash kernel" -> simPlan.contains("simhash64"),
+        "q28 under the cap takes the driver path" ->
+          (driverPlan.contains("LocalTableScan") && !driverPlan.contains("array_intersect")))
       checks.foreach { case (label, ok) =>
         if (!ok) failed += 1
         println(s"[plancheck] dedup_kernels :: $label -> ${if (ok) "OK" else "FAILED"}")

@@ -11,4 +11,6 @@ object HashFunctions {
     org.apache.spark.sql.graft.HashFunctions.simHash64(hashes)
   def wordShingleHash(text: Column, k: Int, prime: Long): Column =
     org.apache.spark.sql.graft.HashFunctions.wordShingleHash(text, k, prime)
+  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    org.apache.spark.sql.graft.HashFunctions.lshBandKeys(sig, bands, rowsPerBand)
 }

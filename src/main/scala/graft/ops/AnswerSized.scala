@@ -1,14 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** The graph family's answer-sized gate, shared by
-  * `Dedup.connectedComponents`, `Dedup.deltaComponents` and the four
-  * [[PageRank]] entry points, and the only reader of
-  * `graft.cc.driverEdgeCap`: the graph family's answer-sized edge cap
-  * (default 100k rows ≈ 1.6 MB of id pairs, inside the broadcast
-  * build-side contract; clamped to [0, Int.MaxValue - 1], the largest
-  * limit a probe can take).
+/** The answer-sized gate of the graph and dedup families, shared by
+  * `Dedup.connectedComponents`, `Dedup.deltaComponents`,
+  * `Dedup.minHashPairs` and the four [[PageRank]] entry points, and the
+  * only reader of `graft.cc.driverEdgeCap`: the graph and dedup
+  * families' answer-sized row cap (default 100k rows ≈ 1.6 MB of id
+  * pairs, inside the broadcast build-side contract; clamped to
+  * [0, Int.MaxValue - 1], the largest limit a probe can take).
   *
   * `df` is landed once — an eager [[Lineage.cut]] — and a
   * `limit(cap + 1)` probe reads the landed blocks in one task. At or
@@ -33,8 +33,7 @@ object AnswerSized {
       QueryLog.note(s"$op.distributed", -1L)
       return Right(landed)
     }
-    val cap = df.sparkSession.conf.get("graft.cc.driverEdgeCap", "100000").toLong
-      .max(0L).min(Int.MaxValue - 1L)
+    val cap = this.cap(df.sparkSession)
     val probe = landed.coalesce(1).limit(cap.toInt + 1).collect()
     if (probe.length <= cap) {
       QueryLog.note(s"$op.driverPath", probe.length.toLong)
@@ -44,4 +43,9 @@ object AnswerSized {
       Right(landed)
     }
   }
+
+  /** The row cap, for a driver path that bounds what it builds from
+    * the landed rows by the same measure. */
+  private[graft] def cap(spark: SparkSession): Long =
+    spark.conf.get("graft.cc.driverEdgeCap", "100000").toLong.max(0L).min(Int.MaxValue - 1L)
 }

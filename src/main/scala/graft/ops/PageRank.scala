@@ -125,7 +125,7 @@ object PageRank {
       "(cast one side explicitly — integral ids halve shuffle width vs strings)")
   }
 
-  private val Integral = Seq(ByteType, ShortType, IntegerType, LongType)
+  private[graft] val Integral = Seq(ByteType, ShortType, IntegerType, LongType)
 
   /** Rejects a non-integral id column. A silent cast would turn
     * un-castable strings into NULLs (dropping their edges) and truncate

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Native MinHash signature: for each permutation p, min over the input
   * hash array of (a_p*h + b_p) mod prime. One tight primitive loop instead
@@ -118,6 +121,75 @@ case class SimHash64(child: Expression)
     copy(child = newChild)
 }
 
+/** LSH band keys of a MinHash signature in one native pass:
+  * `array<struct<band:int,bkey:bigint>>`, one entry per band, where bkey
+  * is Spark's `xxhash64(b, array_join(slice(sig, b*r + 1, r), ","))` —
+  * the seed-42 hash of the band number chained into the hash of the
+  * UTF-8 comma-joined decimal slice. A null signature keys every band
+  * on its number alone, as `xxhash64` skips a null argument.
+  *
+  * Replaces one `transform` lambda per band, which Spark evaluates on
+  * its interpreted higher-order-function path. */
+case class LshBandKeys(child: Expression, bands: Int, rowsPerBand: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = LshBandKeys.Type
+  override def nullable: Boolean = false
+  override def prettyName: String = "lsh_band_keys"
+
+  override def eval(input: InternalRow): Any =
+    LshBandKeys.compute(child.eval(input).asInstanceOf[ArrayData], bands, rowsPerBand)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |final ArrayData ${ev.value} = org.apache.spark.sql.graft.LshBandKeys.compute(
+      |  ${c.isNull} ? null : ${c.value}, $bands, $rowsPerBand);
+    """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object LshBandKeys {
+  private final val Seed = 42L
+
+  val Type: DataType = ArrayType(StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("bkey", LongType, nullable = false))), containsNull = false)
+
+  /** Shared by eval and codegen. Mirrors `slice` (a band past the end is
+    * an empty slice) and `array_join` (null elements are skipped). */
+  def compute(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+    val out = new Array[Any](bands)
+    val buf = new java.lang.StringBuilder
+    var b = 0
+    while (b < bands) {
+      var h = XXH64.hashInt(b, Seed)
+      if (sig != null) {
+        buf.setLength(0)
+        val end = math.min(sig.numElements().toLong, b.toLong * rowsPerBand + rowsPerBand).toInt
+        var i = b * rowsPerBand
+        while (i < end) {
+          if (!sig.isNullAt(i)) {
+            if (buf.length > 0) buf.append(',')
+            buf.append(sig.getLong(i))
+          }
+          i += 1
+        }
+        val bytes = buf.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        h = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, h)
+      }
+      out(b) = InternalRow(b, h)
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 /** Column wrappers for the hash kernels. */
 object HashFunctions {
   import org.apache.spark.sql.Column
@@ -127,4 +199,6 @@ object HashFunctions {
     bridge.column(SimHash64(bridge.expression(hashes)))
   def wordShingleHash(text: Column, k: Int, prime: Long): Column =
     bridge.column(WordShingleHash(bridge.expression(text), k, prime))
+  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    bridge.column(LshBandKeys(bridge.expression(sig), bands, rowsPerBand))
 }

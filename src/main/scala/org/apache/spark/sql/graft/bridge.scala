@@ -14,6 +14,13 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `c IN values` as one InSet: the planner sees one expression, not
+    * one literal per value (`isInCollection`'s In list costs analysis
+    * and optimizer time linear in the values on every rule pass). The
+    * values must already be of `c`'s type. */
+  def inSet(c: Column, values: Set[Any]): Column =
+    column(org.apache.spark.sql.catalyst.expressions.InSet(expression(c), values))
+
   /** Build a DataFrame from a custom LogicalPlan node. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =

@@ -46,15 +46,19 @@ class PipelineSpec extends SparkSpec {
     docs.toDF("doc_id", "text").repartition(2).write.parquet(path)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       Dedup.minHashPairs(df, "text", "doc_id").as[(Long, Long, Double)].collect().toSeq
-    val want = pairs(spark.read.parquet(path))
-    val reads = spark.sparkContext.longAccumulator("text reads")
-    val tally = udf { (t: String) => reads.add(1); t }.asNondeterministic()
-    val got = pairs(spark.read.parquet(path).select($"doc_id", tally($"text").as("text")))
-    assert(got == want && got.nonEmpty)
-    // a file-sized input joins its representatives by broadcast, so each
-    // kernel's stage reads the text itself: with the band rows or the
-    // verify sets unlanded, a second copy of a kernel reads it again
-    assert(reads.value == 3L * docs.size, s"${reads.value} text reads for ${docs.size} documents")
+    // under the cap the driver path fetches the band keys and the verify
+    // sets in one scan each; over it the distributed pipeline runs
+    for (cap <- Seq("100000", "0")) withConf("graft.cc.driverEdgeCap", cap) {
+      val want = pairs(spark.read.parquet(path))
+      val reads = spark.sparkContext.longAccumulator("text reads")
+      val tally = udf { (t: String) => reads.add(1); t }.asNondeterministic()
+      val got = pairs(spark.read.parquet(path).select($"doc_id", tally($"text").as("text")))
+      assert(got == want && got.nonEmpty)
+      // a file-sized input joins its representatives by broadcast, so each
+      // kernel's stage reads the text itself: with the band rows or the
+      // verify sets unlanded, a second copy of a kernel reads it again
+      assert(reads.value == 3L * docs.size, s"${reads.value} text reads for ${docs.size} documents")
+    }
   }
 
   test("simHash is identical for identical token multisets, and pairs verify") {

@@ -78,6 +78,7 @@ class QueryLogSpec extends SparkSpec {
     val sm = Seq((1L, 1L), (2L, 1L)).toDF("id", "cluster_id")
     val delta = Seq((2L, 5L), (7L, 8L)).toDF("id_a", "id_b")
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L)).toDF("src", "dst")
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d f"), (3L, "a  B c d e")).toDF("id", "t")
     def paths(ns: Seq[(String, Long)]) = ns.filter(n => n._1.endsWith(".driverPath") || n._1.endsWith(".distributed"))
     for ((cap, path) <- Seq("100000" -> "driverPath", "0" -> "distributed")) withConf("graft.cc.driverEdgeCap", cap) {
       val cc = notes(Dedup.connectedComponents(pairs, "a", "b").collect())
@@ -89,9 +90,12 @@ class QueryLogSpec extends SparkSpec {
       val pr = notes(PageRank.run(edges, 2).collect())
       assert(paths(pr).map(_._1) == Seq(s"pagerank.$path") && pr.contains("pagerank.roundsRun" -> 2L),
         s"cap=$cap: $pr")
+      val mh = notes(Dedup.minHashPairs(docs, "t", "id").collect())
+      assert(paths(mh).map(_._1) == Seq(s"minhash.$path"), s"cap=$cap: $mh")
     }
     // the probed rows ride the note: the landed edges under the cap
     assert(notes(Dedup.connectedComponents(pairs, "a", "b").collect()).contains("cc.driverPath" -> 3L))
+    assert(notes(Dedup.minHashPairs(docs, "t", "id").collect()).contains("minhash.driverPath" -> 3L))
     val rounds = withConf("graft.cc.driverEdgeCap", "0")(notes(Dedup.connectedComponents(pairs, "a", "b").collect()))
     assert(rounds.count(_._1 == "cc.roundsRun") == 1, rounds)
   }
