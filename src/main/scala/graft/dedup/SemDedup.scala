@@ -98,7 +98,7 @@ object SemDedup {
           (col("d_a") === col("d_b") && col("id_a") < col("id_b"))
       else col("id_a") < col("id_b")
     // within-cluster dominance: candidates meet ONLY through the cluster
-    // equi-join (PlanCheck pins the absence of any cross-cluster pairing)
+    // equi-join (the plan audit pins the absence of any cross-cluster pairing)
     val dominatedReps = a.join(b, "cl")
       .filter(dominates)
       .filter(dotF(col("v_a"), col("v_b")) / col("n_a") / col("n_b") > threshold)

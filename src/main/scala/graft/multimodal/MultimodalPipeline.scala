@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    the survivor augmentation — and without the checkpoint Spark re-runs
   *    the payload synthesis/read per consumer. At 100 TB this snapshot IS
   *    the landed raw-asset table a real pipeline reads from storage; the
-  *    final card plan reads NO parquet at all (PlanCheck pins it), because
+  *    final card plan reads NO parquet at all (the plan audit pins it), because
   *    everything downstream rides the snapshot.
   *  - The fingerprint table also materializes once (three consumers: class
   *    map, class-collapsed banded join, survivor rule) — one decode per

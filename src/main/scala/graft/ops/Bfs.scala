@@ -71,7 +71,7 @@ object Bfs {
     visited
   }
 
-  /** The un-truncated single-round expansion plan — what PlanCheck
+  /** The un-truncated single-round expansion plan — what PlanAuditSpec
     * audits for the equi-join + anti-join shape (run()'s per-round
     * checkpoints erase join structure from the final plan by design). */
   private[graft] def auditRound(edges: DataFrame, seeds: DataFrame): DataFrame = {

@@ -89,7 +89,7 @@ object LabelProp {
       .select(col("node"), (-col("w.neg")).as("label"))
   }
 
-  /** One un-truncated round over the seed labeling — the plan PlanCheck
+  /** One un-truncated round over the seed labeling — the plan PlanAuditSpec
     * audits (run()'s per-round truncation erases the join structure
     * from the query's final plan, the PageRank/Bfs convention). */
   def auditRound(edges: DataFrame, srcCol: String, dstCol: String,

@@ -378,7 +378,7 @@ object LlmPipelineQueries {
     // that use case belongs to embeddingPairsExact).
     // The default path is hyperplane-LSH candidates + exact cosine verify
     // (an equi-join on (band, chunk) — no BroadcastNestedLoopJoin;
-    // PlanCheck asserts it). Dedup.embeddingPairsExact is only the
+    // the plan audit asserts it). Dedup.embeddingPairsExact is only the
     // all-pairs cross-check, exercised in PipelineSpec.
     QueryDef("q31_dedup_embed", (s, dir) => {
       import s.implicits._
@@ -508,7 +508,7 @@ object LlmPipelineQueries {
 
     // IVF coarse-quantizer ANN through the PREBUILT-INDEX lifecycle
     // (buildIndex once per corpus → partition-pruned probe per query
-    // batch — the 100 TB shape; PlanCheck asserts the probe scan's
+    // batch — the 100 TB shape; the plan audit asserts the probe scan's
     // PartitionFilters). The index is built on first access and cached
     // per data dir (IvfIndexCache), so a repeated-query workload — and
     // the bench — measures the probe, with train/assign amortized the way
@@ -3286,7 +3286,7 @@ object LlmPipelineQueries {
     // content sentences from the doc's own words, and per-modulus
     // plants for the two page-level drops (%7==3 braces, %11==5 lorem)
     // plus a %13==7 sentence omission that trips the min-lines gate.
-    // Scale shape (PlanCheck-pinned): line+page filters are map-side
+    // Scale shape (plan-audited): line+page filters are map-side
     // array lambdas; ONE corpus-linear shuffle on md5(line) with a
     // map-side-combinable min/count aggregate (no window on the hot
     // all-corpus key); the repeated-line set broadcasts back.
@@ -3420,7 +3420,7 @@ object LlmPipelineQueries {
     // around content lines from the doc's own words, so every rule fires
     // at every sf and overlapping moduli just produce docs that trip
     // several rules at once — both engines construct the same page and
-    // must agree on every fraction. Scale shape (PlanCheck-pinned): ZERO
+    // must agree on every fraction. Scale shape (plan-audited): ZERO
     // shuffle — per-row array sorts + folds; gram counting never
     // explodes (corpus × n_tokens explode-groupBy would be the job's
     // largest shuffle at 100 TB; the oracle pays it, the engine never).
@@ -3599,7 +3599,7 @@ object LlmPipelineQueries {
     // sf: multi-UA runs forming one group, case-insensitive agent match,
     // MERGED same-agent groups, specific-agent-beats-*, empty rule
     // values, `*` wildcards, the `$` end anchor, and longest-match-wins
-    // with Allow breaking ties. Scale shape (PlanCheck-pinned): the rule
+    // with Allow breaking ties. Scale shape (plan-audited): the rule
     // table collapses to one array per HOST (dimension-sized) and
     // BROADCASTS; the URL stream is adjudicated by a per-row fold —
     // never shuffled, never exploded against rules.
@@ -3928,7 +3928,7 @@ object LlmPipelineQueries {
     // oracle re-derives every pixel/sample/luma, hash bit, candidate,
     // component, survivor, and augmented checksum arithmetically — one
     // wrong drop or one recomputed/mis-transformed payload moves a
-    // checksum. PlanCheck pins the snapshot discipline: the final plan
+    // checksum. The plan audit pins the snapshot discipline: the final plan
     // reads NO parquet (everything rides the materialized assets).
     QueryDef("q189_multimodal_pipeline", (s, dir) => {
       import s.implicits._
@@ -3949,8 +3949,8 @@ object LlmPipelineQueries {
     // corpus-keyed exchange past the LM build), the cumulative walk runs
     // over the answer-sized bin table, and the two cut bins per language
     // BROADCAST back onto the doc stream — never an ntile/rank window
-    // funneling a language's whole corpus into one sort task (PlanCheck
-    // pins the broadcast + the absence of any Window in the plan).
+    // funneling a language's whole corpus into one sort task (the plan
+    // audit pins the broadcast + the absence of any Window in the plan).
     // The corpus's natural source/lang mix keeps every language's three
     // buckets populated at every sf; the oracle recomputes the identical
     // model, histogram, and cuts.
@@ -4003,7 +4003,7 @@ object LlmPipelineQueries {
     // doc's own first word), so every target has a real term
     // distribution: the hub's top terms are corpus-count constants, a
     // group's are its 'link' constant plus its members' words. Scale
-    // shape (PlanCheck-pinned): one bounded generator fan-out, ONE
+    // shape (plan-audited): one bounded generator fan-out, ONE
     // map-side-combined (target, term) count, per-target top-k through
     // the scored_top_k BOUNDED HEAP (never a rank window — a hub with a
     // million-term anchor vocabulary reduces to K entries per map task),
@@ -4045,7 +4045,7 @@ object LlmPipelineQueries {
     // English docs score positive, others negative, and the `keep`
     // verdict is the paper's acceptance direction). Per-bucket
     // log-ratios integerize to micro-nats before the exact per-doc sum
-    // (the q89 rule). Scale shape (PlanCheck-pinned): both bucket
+    // (the q89 rule). Scale shape (plan-audited): both bucket
     // histograms build in ONE map-side-combined pass over the feature
     // stream (the table is 1024 rows by construction — the point of
     // hashed features at 100 TB), the ratio table BROADCASTS back, and
@@ -4159,7 +4159,7 @@ object LlmPipelineQueries {
     // doc: a subdomain-inherited ban (ads.badsiteK — for K=0 ALSO a
     // more specific entry, proving most-specific-wins attribution), an
     // exact-domain ban, the boundary decoy, and a clean host. Scale
-    // shape (PlanCheck-pinned): suffix matching is depth-bounded
+    // shape (plan-audited): suffix matching is depth-bounded
     // COLUMNS (never an explode), each LEFT-joined against the
     // BROADCAST blocklist — zero shuffles, the URL corpus adjudicated
     // entirely map-side (the q200 cost class).
@@ -4332,7 +4332,7 @@ object LlmPipelineQueries {
     // truncating integral division. A planted 40-char `a` run on
     // doc_id%9==4 drags those docs' entropy measurably below their
     // unpolluted siblings at every sf (the non-degeneracy plant).
-    // Shape (PlanCheck-pinned): a pure per-row fold over the sorted
+    // Shape (plan-audited): a pure per-row fold over the sorted
     // char array — zero shuffle, zero fan-out, the q199 cost class;
     // the oracle pays the unnest-groupBy the engine never does.
     QueryDef("q217_char_entropy", (s, dir) => {
@@ -4545,7 +4545,7 @@ object LlmPipelineQueries {
     // per-bucket log-odds integerize to micro-nats before the exact
     // per-doc sum (q89 rule); seed-unseen buckets fall back to the
     // smoothing-only default via coalesce, never a dropped occurrence.
-    // Scale shape (PlanCheck-pinned): weights/totals/prior broadcast;
+    // Scale shape (plan-audited): weights/totals/prior broadcast;
     // the per-doc sum is the only corpus-keyed exchange.
     QueryDef("q220_quality_classifier", (s, dir) => {
       import s.implicits._
@@ -4624,7 +4624,7 @@ object LlmPipelineQueries {
     // draw goes trivial. The label column is the positive-equivalence
     // key (here the embedding table's cluster label — anchors must not
     // mine their own clustermates as negatives). Scale shape
-    // (PlanCheck-pinned): anchors broadcast, corpus streams through one
+    // (plan-audited): anchors broadcast, corpus streams through one
     // codegen cosine stage into the bounded scored_top_k heap — the
     // exchange carries tasks×anchors×k entries, never scored rows, and
     // no per-anchor rank window sorts the corpus (q32's window shape
@@ -4659,7 +4659,7 @@ object LlmPipelineQueries {
     // Latin-1-encodable). The oracle predicts n_fixes, both char
     // counts, and the md5 of the REPAIRED text analytically — repair
     // must invert the corruption to the byte. Per-row kernel, zero
-    // shuffle (PlanCheck: no exchange/join/window).
+    // shuffle (plan audit: no exchange/join/window).
     QueryDef("q224_mojibake_repair", (s, dir) => {
       import s.implicits._
       // self-insulating plant (r15): the base text is sanitized to ASCII
@@ -4810,7 +4810,7 @@ object LlmPipelineQueries {
     // candidate that must NOT validate). The oracle runs the generic
     // detector too: extract + per-candidate Luhn fold, md5 of the
     // validated list. Pure codegen projection, zero shuffle (the
-    // q70/q199 cost class, PlanCheck-pinned).
+    // q70/q199 cost class, plan-audited).
     QueryDef("q227_card_pii", (s, dir) => {
       import s.implicits._
       val base = lpad((($"doc_id" * 7919 + 123457) % 1000000000000000L)

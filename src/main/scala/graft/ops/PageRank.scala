@@ -325,7 +325,7 @@ object PageRank {
         (nodes("tele") + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
   }
 
-  /** The un-truncated round-1 plan over raw `edges` — what PlanCheck
+  /** The un-truncated round-1 plan over raw `edges` — what PlanAuditSpec
     * audits (run()'s per-round checkpoints erase the join structure
     * from the final query plan by design). */
   private[graft] def auditRound(edges: DataFrame): DataFrame = {

@@ -672,8 +672,8 @@ object RelationalQueries {
     // by a distributed-built sketch of the selective dim subset's keys, so
     // ~99% of lineitem never reaches the join shuffle; the exact join then
     // clears the ~fpp false positives. The oracle sees a plain join — the
-    // sketch is correctness-transparent by construction — while PlanCheck
-    // pins might_contain into the scan stage ahead of the exchange.
+    // sketch is correctness-transparent by construction — while the plan
+    // audit pins might_contain into the scan stage ahead of the exchange.
     QueryDef("q88_bloom_join", (s, dir) => {
       import s.implicits._
       val hot = t(s, dir, "orders").filter($"o_totalprice" > 450000)
@@ -694,7 +694,7 @@ object RelationalQueries {
     // optimization-transparency protocol as q88: the oracle is the plain
     // join — salting must be invisible to the answer by construction
     // (build side replicated per salt, probe salted uniformly, join on
-    // (key, salt)) — while PlanCheck pins the salted plan shape (the
+    // (key, salt)) — while the plan audit pins the salted plan shape (the
     // __salt join key + the Generate replication). The declarative tool
     // for a hot probe key against a small-but-not-broadcastable build
     // side, where AQE's skew splitting can't reach.
@@ -718,7 +718,7 @@ object RelationalQueries {
     // salted q93): both sides written bucketed+sorted on the join key
     // ONCE (memoized per corpus dir via tableExists — the write-once
     // shuffle that every later join amortizes), then the equi-join runs
-    // as a sort-merge join with NO exchange on either side. PlanCheck
+    // as a sort-merge join with NO exchange on either side. The plan audit
     // pins SortMergeJoin + the absence of a join-key hash exchange; the
     // answer-sized report aggregation after the join still shuffles, as
     // it should.
@@ -758,8 +758,8 @@ object RelationalQueries {
     // range query reads ONLY the file subset the footer zonemap
     // manifest admits, plus the residual row filter. The oracle is the
     // plain full-table filter — hash equality proves the pruned scan
-    // loses no rows; PlanCheck pins that the scan's file set strictly
-    // shrinks AND equals the manifest's prediction. At 100 TB the
+    // loses no rows; the plan audit pins that the scan's file set
+    // strictly shrinks AND equals the manifest's prediction. At 100 TB the
     // manifest turns a million-file listing into the covering dozen.
     QueryDef("q98_pruned_scan", (s, dir) => {
       import s.implicits._
@@ -1331,8 +1331,8 @@ object RelationalQueries {
     // (corpus, content-fingerprint) — the q98 amortization discipline.
     // The oracle is the plain full-table IN-filter: hash equality proves
     // membership pruning loses no rows (a wrongly-dropped file = missing
-    // rows = mismatch); PlanCheck pins that the scan's file set strictly
-    // shrinks. At 100 TB this is the difference between a point lookup
+    // rows = mismatch); the plan audit pins that the scan's file set
+    // strictly shrinks. At 100 TB this is the difference between a point lookup
     // reading ~1 file and reading the corpus.
     QueryDef("q136_bloom_scan", (s, dir) => {
       import s.implicits._

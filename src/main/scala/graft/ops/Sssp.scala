@@ -47,7 +47,7 @@ object Sssp {
   }
 
   /** One relaxation round: dist' = min(dist, min over incoming edges of
-    * dist(src) + w). Exposed un-truncated for PlanCheck's round audit. */
+    * dist(src) + w). Exposed un-truncated for PlanAuditSpec's round audit. */
   def relaxOnce(dist: DataFrame, edges: DataFrame): DataFrame =
     dist.unionByName(
         edges.join(dist.withColumnRenamed("node", "src"), "src")

@@ -141,7 +141,7 @@ object TrainingPrep {
     *
     * Scale shape: per-stratum top-n runs through the ScoredTopK bounded
     * heap — map-side partials shuffle tasks×strata×n entries, NEVER a
-    * per-stratum Window sort of the full corpus (the q54/PlanCheck rule).
+    * per-stratum Window sort of the full corpus (the q54/plan-audit rule).
     * Rank collisions (~rows²/2·10⁹ per stratum) tie-break on the smaller
     * id identically in the heap and in `ORDER BY h, id` SQL. */
   def stratifiedSample(docs: DataFrame, idCol: String, strataCol: String,
@@ -378,7 +378,7 @@ object TrainingPrep {
     // both sides are language-table-sized; hint the kept side so the
     // answer assembly can never degrade to a sort-merge join (the
     // unhinted join was planner-flaky — an SMJ appeared in one
-    // PlanCheck pass)
+    // plan-audit pass)
     rates.join(broadcast(kept), Seq(langCol), "left")
       .select(col(langCol), col("n_docs"), col("w_u"), col("rate_u"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"))

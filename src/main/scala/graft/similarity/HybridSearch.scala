@@ -37,7 +37,7 @@ object HybridSearch {
     * convention, made loud instead of lossy): a count over the query
     * batch rides its broadcast evaluation — no extra corpus scan — and
     * raises past the bound, where a silently-huge batch would turn the
-    * leg into an all-pairs corpus product. PlanCheck pins the intended
+    * leg into an all-pairs corpus product. The plan audit pins the intended
     * BroadcastNestedLoopJoin shape explicitly. */
   def jaccardTopK(docs: DataFrame, textCol: String, idCol: String,
       queryPred: Column, k: Int, gram: Int = 3,

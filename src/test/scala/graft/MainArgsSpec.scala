@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.examples.{PlanCheck, PlanDump}
+import graft.examples.PlanDump
 
 /** The command-line mains refuse arguments that would do nothing or the
   * wrong thing, instead of running zero queries or dying mid-way. */
@@ -27,17 +27,6 @@ class MainArgsSpec extends AnyFunSuite {
       assert(Bench.parseArgs(args).left.exists(_.contains("unknown option")), args)
     assert(Bench.parseArgs(Seq("q69", "nope")).left.exists(_.contains("no query name starts with 'nope'")))
     assert(Bench.Usage.startsWith("usage: Bench"))
-  }
-
-  test("PlanCheck takes audited query names and refuses flags and names without an audit") {
-    val names = Seq("q125_corpus_pipeline", "q226_delta_components", "q236_compact_components")
-    assert(PlanCheck.parseArgs(Nil) == Right(Nil))
-    assert(PlanCheck.parseArgs(names) == Right(names))
-    assert(PlanCheck.parseArgs(Seq("--help")).left.exists(_.contains("unknown option")))
-    // a real query with no audit, and a prefix of an audited name
-    for (name <- Seq("q69_dup_clusters", "q125"))
-      assert(PlanCheck.parseArgs(names :+ name).left.exists(_.contains(s"no plan audit for '$name'")), name)
-    assert(PlanCheck.Usage.startsWith("usage: PlanCheck"))
   }
 
   test("PlanDump takes <outDir> <suffix> [queryName ...] and refuses flags, missing arguments and unknown names") {

@@ -1,21 +1,22 @@
-package graft.examples
+package graft
 
-import graft.{GraftSession, SparkEntry}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Plan audit: prints the formatted physical plan of selected queries and
-  * asserts the plan properties that matter at 100 TB — filters pushed to
-  * the parquet scan, pruned read schemas, broadcast joins where a side is
-  * small, whole-stage codegen coverage.
-  *
-  * Run: sbt "runMain graft.examples.PlanCheck [queryName ...]"
-  * (unknown names and flags are refused with usage text and exit 2)
-  */
-object PlanCheck {
-  /** `conf` is set while the query's plan is built, then restored. */
-  private case class Want(query: String, mustContain: Seq[(String, String)],
+/** The plan properties that matter at 100 TB, as test data: filters pushed
+  * to the parquet scan, pruned read schemas, broadcast joins where a side
+  * is small, codegen kernels, and no cartesian or all-pairs nested loop.
+  * Each [[PlanAudits.Want]] row names a registered query and the needles
+  * its formatted physical plan must and must not contain. `QueriesSpec`
+  * checks the rows without a `conf` on the build its smoke check already
+  * makes; `PlanAuditSpec` builds the rows with one, and holds the audits
+  * that need a plan other than a query's final one. */
+object PlanAudits {
+  /** `conf` is set while the query's plan is built and explained, then restored. */
+  case class Want(query: String, mustContain: Seq[(String, String)],
       mustNotContain: Seq[(String, String)] = Seq.empty, conf: Map[String, String] = Map.empty)
 
-  private val audits = Seq(
+  val audits: Seq[Want] = Seq(
     Want("q2_filter_project", Seq(
       "filter pushed to scan" -> "PushedFilters: [IsNotNull(l_shipdate)",
       "column-pruned read" -> "ReadSchema: struct<l_orderkey:bigint,l_linenumber:int,l_quantity:double,l_extendedprice:double,l_discount:double,l_shipdate:timestamp>")),
@@ -47,7 +48,7 @@ object PlanCheck {
       "corpus scored via cell equi-join" -> "BroadcastHashJoin",
       "bounded-heap rerank aggregate" -> "scored_top_k")),
     // the q83 SparkEntry binding of the IVF+PQ probe (the ivfpq_probe
-    // section below re-checks the same shape on a throwaway index, plus
+    // audit in PlanAuditSpec re-checks the same shape on a throwaway index, plus
     // the file-level strict-subset assertion)
     Want("q83_ann_ivfpq", Seq(
       "probe scan partition-pruned on cell" -> "PartitionFilters: [cell",
@@ -232,11 +233,10 @@ object PlanCheck {
         "no nested-loop join" -> "BroadcastNestedLoopJoin")),
     // gapfill: the 1-row day-bounds aggregate broadcast over the user
     // list IS the intended tiny BNLJ (same convention as q80's bounds);
-    // the observed side arrives by a (user, day) equi-join and LOCF is
-    // one running window — assert the big-side shapes
     // the observed side arrives by a (user, day) hash equi-join — which
     // PHYSICAL hash join is a size call (broadcast at test SF, shuffled/SMJ
-    // under AQE at scale), so pin the equi-join family, not one member
+    // under AQE at scale), so pin the equi-join family, not one member —
+    // and LOCF is one running window
     Want("q105_gapfill", Seq(
       "grid densified by a generator" -> "Generate",
       "LOCF via the running window" -> "Window",
@@ -252,7 +252,7 @@ object PlanCheck {
         "no nested-loop join" -> "BroadcastNestedLoopJoin")),
     // triangles: per-node attribution explodes the (u,v,w) triples and
     // partial-aggregates; the closure joins are audited un-truncated in
-    // the custom section below (checkpoints erase them here by design)
+    // PlanAuditSpec's triangle_closure (checkpoints erase them here by design)
     Want("q107_triangles", Seq(
       "per-node attribution via explode" -> "Generate",
       "map-side partial triangle count" -> "partial_count"),
@@ -293,7 +293,7 @@ object PlanCheck {
         "no cartesian" -> "CartesianProduct",
         "no nested-loop join" -> "BroadcastNestedLoopJoin")),
     // phrase search: the index build's Generate+Window live behind the
-    // memoizing checkpoint (audited un-truncated in the custom section);
+    // memoizing checkpoint (audited un-truncated in PlanAuditSpec);
     // the query plan shows the broadcast top-phrase probe
     Want("q110_phrase_search", Seq(
       "top phrase joined by broadcast" -> "BroadcastHashJoin"),
@@ -421,7 +421,7 @@ object PlanCheck {
         "no cartesian" -> "CartesianProduct")),
     // label propagation: the final plan is the checkpointed label table
     // + the community-size window (the round joins are audited
-    // un-truncated in the labelprop_round section below)
+    // un-truncated in PlanAuditSpec's labelprop_round)
     Want("q130_label_prop", Seq(
       "community sizes via the label window" -> "Window"),
       mustNotContain = Seq(
@@ -477,10 +477,10 @@ object PlanCheck {
     // flagship dedup path).
     // the signature/banding stages sit behind the collapse + capped-bucket
     // checkpoints (erased from the FINAL plan by design — the
-    // dedup_kernels section below audits the native kernels on the stage
+    // dedup_kernels audit in PlanAuditSpec pins the native kernels on the stage
     // plans directly); the verify kernel runs downstream and stays visible.
     // Test-scale corpora sit under the answer-sized cap, where the pairs
-    // are finished on the driver (dedup_kernels checks that path), so the
+    // are finished on the driver (the next row checks that path), so the
     // distributed plan is built at cap 0.
     Want("q28_dedup_minhash", Seq(
       "exact-Jaccard verify kernel" -> "array_intersect"),
@@ -489,15 +489,17 @@ object PlanCheck {
         "no cartesian candidate generation" -> "CartesianProduct",
         "no all-pairs nested loop" -> "BroadcastNestedLoopJoin"),
       conf = Map("graft.cc.driverEdgeCap" -> "0")),
+    // at the default cap the test corpora are answer-sized: the pairs are
+    // finished on the driver and q28 reads a local relation
+    Want("q28_dedup_minhash", Seq(
+      "under the cap q28 takes the driver path" -> "LocalTableScan"),
+      mustNotContain = Seq(
+        "no distributed verify under the cap" -> "array_intersect")),
     Want("q29_dedup_simhash", Seq.empty,
       mustNotContain = Seq(
         "no hot-fingerprint window in the exact collapse" -> "Window",
         "no cartesian candidate generation" -> "CartesianProduct",
         "no all-pairs nested loop" -> "BroadcastNestedLoopJoin")),
-    // delta dedup: bucket pruning, banding, and candidate generation run
-    // inside the eager delta-sized checkpoints, so the FINAL plan is the
-    // verify join + group expansion — pin the exact-Jaccard verify kernel
-    // and that no candidate path degenerated to a cross product
     // advanced-index probe: the same final-plan class as q147 — the
     // advance itself runs eagerly (delta-sized checkpoints + appends)
     // before this plan exists, so what must stay pinned is the probe
@@ -516,6 +518,10 @@ object PlanCheck {
       mustNotContain = Seq(
         "no cartesian candidate generation" -> "CartesianProduct",
         "no all-pairs nested loop" -> "BroadcastNestedLoopJoin")),
+    // delta dedup: bucket pruning, banding, and candidate generation run
+    // inside the eager delta-sized checkpoints, so the FINAL plan is the
+    // verify join + group expansion — pin the exact-Jaccard verify kernel
+    // and that no candidate path degenerated to a cross product
     Want("q147_delta_dedup", Seq(
       "broadcast group-expansion joins" -> "BroadcastHashJoin",
       "exact-Jaccard verify kernel" -> "array_intersect"),
@@ -1203,380 +1209,27 @@ object PlanCheck {
       mustNotContain = Seq(
         "no cartesian" -> "CartesianProduct")))
 
-  val Usage: String =
-    "usage: PlanCheck [queryName ...]  (no name runs every audit; SPARK_GRAFT_SF_DIR picks the data)"
+  /** The formatted physical plan, as `explain("formatted")` prints it. */
+  def planOf(df: DataFrame): String = df.queryExecution.explainString(FormattedMode)
 
-  /** The audited query names to check, or why they are refused: a flag,
-    * or a name with no plan audit (it would be checked against nothing). */
-  def parseArgs(args: Seq[String]): Either[String, Seq[String]] =
-    args.collectFirst {
-      case flag if flag.startsWith("-") => s"unknown option '$flag'"
-      case name if !audits.exists(_.query == name) => s"no plan audit for '$name'"
-    }.toLeft(args)
+  /** `w`'s assertions on `plan`: a label per needle, and whether it holds. */
+  def checks(w: Want, plan: String): Seq[(String, Boolean)] =
+    w.mustContain.map { case (label, needle) =>
+      s"${w.query} :: $label (missing $needle)" -> plan.contains(needle) } ++
+    w.mustNotContain.map { case (label, needle) =>
+      s"${w.query} :: $label (present $needle)" -> !plan.contains(needle) }
 
-  def main(args: Array[String]): Unit = {
-    parseArgs(args.toSeq).left.foreach { err =>
-      System.err.println(s"PlanCheck: $err\n$Usage")
-      sys.exit(2)
-    }
-    val spark = GraftSession()
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val wanted = if (args.nonEmpty) audits.filter(a => args.contains(a.query)) else audits
-    var failed = 0
-    wanted.foreach { a =>
-      val prior = a.conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      a.conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      val df = try SparkEntry.queries(a.query)(spark, dir)
-        finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== ${a.query} ==========")
-      println(plan.linesIterator.take(40).mkString("\n"))
-      a.mustContain.foreach { case (label, needle) =>
-        val ok = plan.contains(needle)
-        if (!ok) failed += 1
-        println(s"[plancheck] ${a.query} :: $label -> ${if (ok) "OK" else s"MISSING ($needle)"}")
-      }
-      a.mustNotContain.foreach { case (label, needle) =>
-        val ok = !plan.contains(needle)
-        if (!ok) failed += 1
-        println(s"[plancheck] ${a.query} :: $label -> ${if (ok) "OK" else s"PRESENT ($needle)"}")
-      }
-    }
-    // Partition-pruning audit: day-partitioned events + a day predicate
-    // must prune at planning time (PartitionFilters) AND at the file level
-    // (inputFiles strictly smaller than the full layout).
-    if (args.isEmpty) {
-      val pdir = graft.Scratch.dir("graft_part").toString + "/events_by_day"
-      graft.sources.Partitioned.writeEventsByDay(spark, dir, pdir)
-      val all = spark.read.parquet(pdir)
-      // partition-column type inference reads day=YYYY-MM-DD back as DATE
-      val day = all.select("day").agg(org.apache.spark.sql.functions.min("day"))
-        .head().get(0).toString
-      val pruned = graft.sources.Partitioned.readDay(spark, pdir, day)
-      val plan = pruned.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== partition_pruning (day=$day) ==========")
-      println(plan.linesIterator.take(25).mkString("\n"))
-      val checks = Seq(
-        "day predicate is a PartitionFilter" ->
-          (plan.contains("PartitionFilters: [isnotnull(day") && plan.contains("(day")),
-        "scan reads a strict file subset" -> {
-          import org.apache.spark.sql.graft.bridge.scannedFileCount
-          scannedFileCount(pruned) > 0 && scannedFileCount(pruned) < scannedFileCount(all)
-        },
-        "no post-scan day filter needed" -> !plan.contains("PushedFilters: [*day"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] partition_pruning :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
+  /** The labels of the checks that do not hold. */
+  def failed(checks: Seq[(String, Boolean)]): Seq[String] = checks.collect { case (label, false) => label }
 
-    // IVF+PQ probe audit: the composed index's probe scan must prune to
-    // the probed cells at plan AND file level, shortlist through the
-    // bounded-heap aggregate, and never fall back to a nested loop.
-    if (args.isEmpty) {
-      import org.apache.spark.sql.functions.col
-      val emb = graft.sources.Tables.load(spark, dir, "embeddings")
-      val ipath = graft.Scratch.dir("graft_ivfpq").toString
-      graft.similarity.IvfPq.buildIndex(emb, "embedding", "vec_id",
-        dim = 64, nCells = 16, m = 8, kCodes = 16, path = ipath)
-      val probe = graft.similarity.IvfPq.probeTopK(spark, ipath,
-        emb.filter(col("vec_id") < 3), "embedding", "vec_id",
-        k = 5, nProbe = 4, shortlist = 50)
-      val plan = probe.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== ivfpq_probe ==========")
-      println(plan.linesIterator.take(40).mkString("\n"))
-      val all = spark.read.parquet(s"$ipath/data")
-      val prunedScan = all.filter(col("cell").isInCollection(Seq(0, 1).map(Int.box)))
-      import org.apache.spark.sql.graft.bridge.scannedFileCount
-      val checks = Seq(
-        "probe scan partition-pruned on cell" -> plan.contains("PartitionFilters: [cell"),
-        "ADC shortlist + rerank via bounded heap" -> plan.contains("scored_top_k"),
-        "cell filter reads a strict file subset" ->
-          (scannedFileCount(prunedScan) > 0 &&
-            scannedFileCount(prunedScan) < scannedFileCount(all)),
-        "no nested-loop fallback" -> !plan.contains("BroadcastNestedLoopJoin"),
-        "no cartesian" -> !plan.contains("CartesianProduct"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] ivfpq_probe :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
+  /** An equi-join of some physical kind; which kind is a size call. */
+  def equiJoin(plan: String): Boolean =
+    Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin").exists(plan.contains)
 
-    // Native-kernel audit for the banding dedup pipelines: q28/q29's
-    // signature + banding stages run inside the collapse/capped-bucket
-    // checkpoints, so their FINAL plans cannot show the kernels — pin
-    // them on the stage plans directly (the same df the pipelines band).
-    if (args.isEmpty || args.contains("q28_dedup_minhash") ||
-        args.contains("q29_dedup_simhash")) {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.sources.Tables.load(spark, dir, "documents").limit(10)
-      def planOf(df: org.apache.spark.sql.DataFrame) =
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      val sigPlan = planOf(docs.select(
-        graft.dedup.Dedup.minHashSignature(col("text")).as("sig")))
-      val simPlan = planOf(docs.select(
-        graft.dedup.Dedup.simHash64(col("text")).as("sim")))
-      val bandPlan = planOf(docs.select(graft.dedup.Dedup.lshBands(
-        graft.dedup.Dedup.minHashSignature(col("text")), 21, 3).as("b")))
-      // at the default cap this corpus is answer-sized: the pairs are
-      // finished on the driver and q28 reads a local relation
-      val driverPlan = planOf(SparkEntry.queries("q28_dedup_minhash")(spark, dir))
-      println(s"\n========== dedup_kernels (q28/q29) ==========")
-      println(driverPlan.linesIterator.take(12).mkString("\n"))
-      val checks = Seq(
-        "native minhash signature kernel" -> sigPlan.contains("minhash_sig"),
-        "native shingle-hash kernel" -> sigPlan.contains("word_shingle_hash"),
-        "native band-key kernel, no lambda" ->
-          (bandPlan.contains("lsh_band_keys") && !bandPlan.contains("lambda")),
-        "native simhash kernel" -> simPlan.contains("simhash64"),
-        "q28 under the cap takes the driver path" ->
-          (driverPlan.contains("LocalTableScan") && !driverPlan.contains("array_intersect")))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] dedup_kernels :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
+  def noCartesian(plan: String): Boolean = !plan.contains("CartesianProduct")
 
-    // Manifest-pruned scan audit (q98): the scan Spark actually plans
-    // must read EXACTLY the file subset the footer zonemap manifest
-    // predicts for the key range — a strict subset of the clustered
-    // layout — and the residual range filter must still reach the scan.
-    if (args.isEmpty) {
-      import org.apache.spark.sql.functions.col
-      def norm(s: String) = new org.apache.hadoop.fs.Path(s).toUri.getPath
-      val cdir = graft.ops.RelationalQueries.clusteredLineitem(spark, dir)
-      val pruned = graft.sources.Layout.readPrunedByRange(
-        spark, cdir, "l_orderkey", 1000, 2000)
-      val plan = pruned.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== pruned_scan (q98) ==========")
-      println(plan.linesIterator.take(25).mkString("\n"))
-      val predicted = graft.sources.Layout.prunedFiles(
-        spark, cdir, "l_orderkey", 1000, 2000).map(norm).toSet
-      val actual = pruned.inputFiles.map(norm).toSet
-      val allFiles = spark.read.parquet(cdir).inputFiles.map(norm).toSet
-      val checks = Seq(
-        "scan file set equals the manifest prediction" -> (actual == predicted),
-        "manifest admits a strict subset of the layout" ->
-          (predicted.nonEmpty && predicted.size < allFiles.size),
-        "residual range filter pushed to the scan" ->
-          (plan.contains("GreaterThanOrEqual(l_orderkey") &&
-            plan.contains("LessThanOrEqual(l_orderkey")))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] pruned_scan :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
+  def noNestedLoop(plan: String): Boolean = !plan.contains("BroadcastNestedLoopJoin")
 
-    // PageRank round audit (q100): run()'s per-round lineage truncation
-    // erases the join structure from the final query plan by design, so
-    // audit the un-truncated round-1 plan — rank messages must flow
-    // through an equi-join on src with map-side-combined contribution
-    // sums, never a nested-loop or cartesian.
-    if (args.isEmpty) {
-      import org.apache.spark.sql.functions._
-      val pairs = graft.sources.Tables.load(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(graft.sources.Tables.load(spark, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(concat(lit("s"), col("l_suppkey")).as("a"),
-          concat(lit("c"), col("o_custkey")).as("b"))
-        .distinct()
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-      val plan = graft.ops.PageRank.auditRound(edges).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== pagerank_round (q100) ==========")
-      println(plan.linesIterator.take(30).mkString("\n"))
-      val checks = Seq(
-        "rank messages via equi-join on src" ->
-          (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin") ||
-            plan.contains("BroadcastHashJoin")),
-        "map-side partial contribution sums" -> plan.contains("partial_sum"),
-        "no cartesian" -> !plan.contains("CartesianProduct"),
-        "no nested-loop join" -> !plan.contains("BroadcastNestedLoopJoin"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] pagerank_round :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
-
-    // BFS round audit (q104): run()'s per-round truncation erases the
-    // join structure (the PageRank convention), so audit one un-truncated
-    // expansion — frontier⋈edges must be an equi-join on src and the
-    // visited set must subtract via LeftAnti, never a nested loop.
-    if (args.isEmpty) {
-      import org.apache.spark.sql.functions._
-      val edges = graft.sources.Tables.load(spark, dir, "lineitem")
-        .select(concat(lit("s"), col("l_suppkey")).as("src"),
-          concat(lit("o"), col("l_orderkey")).as("dst")).distinct()
-      val seeds = graft.sources.Tables.load(spark, dir, "supplier")
-        .filter(col("s_nationkey") === 0)
-        .select(concat(lit("s"), col("s_suppkey")).as("node"))
-      val plan = graft.ops.Bfs.auditRound(edges, seeds).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== bfs_round (q104) ==========")
-      println(plan.linesIterator.take(30).mkString("\n"))
-      val checks = Seq(
-        "frontier expands via equi-join on src" ->
-          (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin") ||
-            plan.contains("BroadcastHashJoin")),
-        "visited subtracted via anti-join" -> plan.contains("LeftAnti"),
-        "no cartesian" -> !plan.contains("CartesianProduct"),
-        "no nested-loop join" -> !plan.contains("BroadcastNestedLoopJoin"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] bfs_round :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
-
-    // LPA round audit (q130): run()'s per-round truncation erases the
-    // join structure, so audit one un-truncated vote round — neighbor
-    // labels must flow through an equi-join on src into map-side-combined
-    // vote counts, and the argmax must be the order-free struct-max
-    // aggregate, never a per-node window over vote rows.
-    if (args.isEmpty) {
-      import org.apache.spark.sql.functions._
-      val edges = graft.sources.Tables.load(spark, dir, "lineitem")
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("l_orderkey") * 2 + 1).as("dst")).distinct()
-      val plan = graft.ops.LabelProp.auditRound(edges, "src", "dst")
-        .queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== labelprop_round (q130) ==========")
-      println(plan.linesIterator.take(30).mkString("\n"))
-      val checks = Seq(
-        "neighbor labels via equi-join on src" ->
-          (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin") ||
-            plan.contains("BroadcastHashJoin")),
-        "map-side partial vote counts" -> plan.contains("partial_count"),
-        "argmax is the struct-max aggregate, not a window" ->
-          (plan.contains("partial_max") && !plan.contains("Window")),
-        "no cartesian" -> !plan.contains("CartesianProduct"),
-        "no nested-loop join" -> !plan.contains("BroadcastNestedLoopJoin"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] labelprop_round :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
-
-    // SSSP round audit (q142): runRounds' per-round truncation erases
-    // the join structure, so audit one un-truncated relaxation round —
-    // labels must flow through an equi-join on src into a map-side-
-    // combined min per dst; no window, no nested loop.
-    if (args.isEmpty) {
-      import org.apache.spark.sql.functions._
-      val edges = graft.sources.Tables.load(spark, dir, "lineitem")
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("l_orderkey") * 2 + 1).as("dst"), lit(1L).as("w")).distinct()
-      // non-literal node ids: a 1-row lit() label table would constant-
-      // fold the equi-join into a filtered cross — an audit artifact,
-      // not the operator's shape at any real round
-      val dist = spark.range(4).select((col("id") * 2).as("node"), lit(0L).as("dist"))
-      val plan = graft.ops.Sssp.relaxOnce(dist, edges)
-        .queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== sssp_round (q142) ==========")
-      println(plan.linesIterator.take(30).mkString("\n"))
-      val checks = Seq(
-        "labels flow through an equi-join on src" ->
-          (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin") ||
-            plan.contains("BroadcastHashJoin")),
-        "map-side partial min per dst" -> plan.contains("partial_min"),
-        "no per-node window" -> !plan.contains("Window"),
-        "no cartesian" -> !plan.contains("CartesianProduct"),
-        "no nested-loop join" -> !plan.contains("BroadcastNestedLoopJoin"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] sssp_round :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
-
-    // Phrase-index build audit (q110): topPhraseDocs checkpoints the
-    // postings (consumed twice), erasing the build from the query plan —
-    // audit phraseCounts un-truncated: postings come from a generator,
-    // adjacency from ONE per-doc lead window, and nothing joins.
-    if (args.isEmpty) {
-      val docs = graft.sources.Tables.load(spark, dir, "documents")
-      val plan = graft.text.PhraseIndex.phraseCounts(docs, "text", "doc_id", 3)
-        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== phrase_index_build (q110) ==========")
-      println(plan.linesIterator.take(25).mkString("\n"))
-      val checks = Seq(
-        "postings from a generator" -> plan.contains("Generate"),
-        "adjacency via the per-doc window" -> plan.contains("Window"),
-        "no join in the build" -> !plan.contains("Join"),
-        "no cartesian" -> !plan.contains("CartesianProduct"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] phrase_index_build :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
-
-    // Triangle-closure audit (q107): orient()'s checkpoints erase the
-    // join structure from the query's final plan, so audit the closure
-    // joins over a raw oriented edge list — wedge join + closing join
-    // must be equi-joins, never a nested loop.
-    if (args.isEmpty) {
-      import org.apache.spark.sql.functions._
-      val oriented = graft.sources.Tables.load(spark, dir, "lineitem")
-        .select(concat(lit("s"), col("l_suppkey")).as("src"),
-          concat(lit("o"), col("l_orderkey")).as("dst")).distinct()
-      val plan = graft.ops.Triangles.triangleTriples(oriented).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== triangle_closure (q107) ==========")
-      println(plan.linesIterator.take(30).mkString("\n"))
-      val checks = Seq(
-        "closure via equi-joins" ->
-          (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin") ||
-            plan.contains("BroadcastHashJoin")),
-        "no cartesian" -> !plan.contains("CartesianProduct"),
-        "no nested-loop join" -> !plan.contains("BroadcastNestedLoopJoin"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] triangle_closure :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
-
-    // Bloom point-lookup audit (q136): the hash-distributed layout makes
-    // zonemaps useless by design, so the Bloom manifest must do the
-    // pruning — the scan's file set must equal the manifest's prediction,
-    // be a strict subset of the 16-file layout, and the residual IN
-    // filter must reach the scan in the key's native type.
-    if (args.isEmpty) {
-      def norm(s: String) = new org.apache.hadoop.fs.Path(s).toUri.getPath
-      val (bdir, mdir) = graft.ops.RelationalQueries.bloomOrders(spark, dir)
-      val manifest = spark.read.parquet(mdir)
-      val keys = Seq(7L, 1007L, 2007L, 3007L, 4007L)
-      val pruned = graft.sources.BloomIndex.readPruned(
-        spark, bdir, manifest, "o_orderkey", keys)
-      val plan = pruned.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n========== bloom_scan (q136) ==========")
-      println(plan.linesIterator.take(25).mkString("\n"))
-      val predicted = graft.sources.BloomIndex.keptFiles(
-        spark, manifest, keys.map(String.valueOf)).map(norm).toSet
-      val actual = pruned.inputFiles.map(norm).toSet
-      val allFiles = spark.read.parquet(bdir).inputFiles.map(norm).toSet
-      val checks = Seq(
-        "scan file set equals the manifest prediction" -> (actual == predicted),
-        "manifest admits a strict subset of the layout" ->
-          (predicted.nonEmpty && predicted.size < allFiles.size),
-        "residual IN filter pushed to the scan in native type" ->
-          plan.contains("In(o_orderkey"))
-      checks.foreach { case (label, ok) =>
-        if (!ok) failed += 1
-        println(s"[plancheck] bloom_scan :: $label -> ${if (ok) "OK" else "FAILED"}")
-      }
-    }
-
-    println(s"\n[plancheck] ${if (failed == 0) "ALL OK" else s"$failed FAILED"}")
-    spark.stop()
-    if (failed > 0) sys.exit(1)
-  }
+  /** `part` files are a non-empty strict subset of `whole`'s. */
+  def strictSubset(part: Long, whole: Long): Boolean = part > 0 && part < whole
 }

@@ -2,7 +2,8 @@ package graft
 
 /** Smoke-level invariants for every SparkEntry query at sf0.001 — the
   * deep value check is the driver's DuckDB oracle compare (tools/check.py);
-  * this guards against regressions that break a plan outright. */
+  * this guards against regressions that break a plan outright, and the
+  * same build serves the query's plan audit ([[PlanAudits]]). */
 class QueriesSpec extends SparkSpec {
 
   /** §5 surface rule (r12): no registered query may put a DECIMAL of
@@ -24,17 +25,37 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
-  test("every registered query runs, returns rows, and surfaces no wide decimal") {
-    val failures = SparkEntry.allDefs.flatMap { d =>
-      try {
-        val df = d.run(spark, sfDir)
-        val wide = df.schema.fields.toSeq.flatMap(f => wideDecimals(f.dataType, f.name))
-        val n = df.count()
+  private val defaultConfAudits: Map[String, PlanAudits.Want] =
+    PlanAudits.audits.filter(_.conf.isEmpty).map(w => w.query -> w).toMap
+
+  /** Every registered query, built once at default conf: what its smoke
+    * check found wrong, and the failed checks of its plan audit, if it has
+    * one without a `conf` ([[PlanAudits]]). */
+  private lazy val runs: Seq[(Option[String], Seq[String])] = SparkEntry.allDefs.map { d =>
+    val audit = defaultConfAudits.get(d.name)
+    try {
+      val df = d.run(spark, sfDir)
+      val auditFailures = audit.toSeq.flatMap(w => PlanAudits.failed(PlanAudits.checks(w, PlanAudits.planOf(df))))
+      val wide = df.schema.fields.toSeq.flatMap(f => wideDecimals(f.dataType, f.name))
+      val n = df.count()
+      val smoke =
         if (n == 0) Some(s"${d.name}: 0 rows")
         else if (wide.nonEmpty) Some(s"${d.name}: wide decimal in output (${wide.mkString(", ")}) — cast to string at the surface (§5)")
         else None
-      } catch { case e: Throwable => Some(s"${d.name}: ${e.getMessage.take(120)}") }
+      (smoke, auditFailures)
+    } catch { case e: Throwable =>
+      val msg = s"${d.name}: ${e.getMessage.take(120)}"
+      (Some(msg), audit.map(_ => s"$msg (not audited)").toSeq)
     }
+  }
+
+  test("every registered query runs, returns rows, and surfaces no wide decimal") {
+    val failures = runs.flatMap(_._1)
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  test("every plan audit without a conf holds on the query's default build") {
+    val failures = runs.flatMap(_._2)
     assert(failures.isEmpty, failures.mkString("; "))
   }
 

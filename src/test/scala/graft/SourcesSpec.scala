@@ -48,8 +48,12 @@ class SourcesSpec extends SparkSpec {
     val expected = Tables.load(spark, sfDir, "events")
       .filter(date_format($"ts", "yyyy-MM-dd") === day).count()
     assert(pruned.count() == expected && expected > 0)
-    assert(scannedFileCount(pruned) > 0 &&
-      scannedFileCount(pruned) < scannedFileCount(all))
+    assert(PlanAudits.strictSubset(scannedFileCount(pruned), scannedFileCount(all)))
+    // pruned at planning time: the day predicate is a partition filter,
+    // and no day filter is left for after the scan
+    val plan = PlanAudits.planOf(pruned)
+    assert(plan.contains("PartitionFilters: [isnotnull(day") && plan.contains("(day"), plan)
+    assert(!plan.contains("PushedFilters: [*day"), plan)
   }
 
   test("Layout.compact rewrites a fragmented dir to the computed file count, content intact") {
